@@ -36,19 +36,16 @@ Execution shape (scale notes):
   zone arrays when filters were pushed), each chunk row is zone-tested
   in pure python (the per-part summary test _part_keep_term applied at
   chunk granularity; Bloom filters are skipped — conservative), and
-  surviving chunks decode straight to Arrow RecordBatches via
-  ``decode_column`` — the identical kernels decode_table uses, so the
-  two read paths cannot diverge.  Column projection prunes DECODE and
-  DECOMPRESSION per column (payloads are per-column), matching
-  decode_table's contract.
-* Global-dict columns are restored executor-side with one
-  ``pa.compute.take`` over the snapshot-persisted dictionary
-  (metadata-sized by the _GDICT_MAX_META write cap) — null ids stay
-  null, mirroring manifest._restore_global_dicts' null guard.
-* Schema-evolution renames/drops are honored through the same
-  physical->logical mapping the evolved decoder uses
-  (engine.decode_table `renames` path); metadata-only added columns
-  decode as nulls.
+  surviving chunks decode through the engine's one chunk-decode kernel
+  (``engine.decode_chunk_rows``), the same function decode_table's
+  mapInArrow runs — one implementation, not a mirror.  That kernel
+  does all of: column projection (unselected payloads are never
+  decompressed), schema evolution (renames/drops through the
+  physical->logical map, widened columns decoded at their chunk width
+  then upcast, metadata-only added columns as nulls), global-dict
+  restore (one ``pa.compute.take`` over the snapshot's dictionary,
+  null ids stay null), and the conform to the Arrow types Spark
+  expects.
 
 Not supported here (use read_decoded, which routes through Spark-side
 joins): tables with pending equality deletes — the reader raises
@@ -58,7 +55,6 @@ rather than silently resurrecting deleted rows.
 from __future__ import annotations
 
 import pyarrow as pa
-import pyarrow.compute as pc
 
 from pyspark.sql.datasource import (DataSource, DataSourceArrowWriter,
                                     DataSourceReader,
@@ -110,12 +106,13 @@ def _load_table_state(options) -> dict:
     }
 
 
-def _logical_schema(state: dict) -> pa.Schema:
-    """The reader-facing Arrow schema: global-dict columns surface as
+def _spark_schema(state: dict):
+    """The reader-facing Spark schema: global-dict columns surface as
     their VALUE type (string), not the stored int ids."""
-    phys = pa.ipc.read_schema(pa.BufferReader(state["schema_ipc"]))
-    return pa.schema([pa.field(f.name, pa.string()) if f.name
-                      in state["gdicts"] else f for f in phys])
+    from .engine import decoded_spark_schema
+    return decoded_spark_schema(
+        pa.ipc.read_schema(pa.BufferReader(state["schema_ipc"])),
+        state["gdicts"])
 
 
 def _translate_filter(f):
@@ -214,96 +211,42 @@ def _read_part_file(file: str, state: dict, zpred):
     """Executor-side decode of ONE part file to Arrow RecordBatches —
     shared by the batch reader and the streaming source.  Chunk-level
     zone pruning (zpred not None) happens before any decompression;
-    widened columns decode at their chunk-physical width then upcast;
-    global-dict columns restore via one pc.take; tz-naive stored
-    timestamps conform to timestamp[us, tz=UTC] (the schema Spark
-    expects for the declared types — metadata-only, session-tz-proof,
-    same rule as engine.decode_table)."""
+    surviving chunks go through the engine's decode kernel
+    (engine.decode_chunk_rows: evolution, global-dict restore and the
+    conform to Spark's Arrow types, exactly as decode_table)."""
     import pyarrow.parquet as pq
 
-    from pyspark.sql.pandas.types import (from_arrow_schema,
-                                          to_arrow_schema)
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    from .codecs import decode_column
+    from .engine import decode_chunk_rows
     from .manifest import _part_keep_term
 
-    out_schema = _logical_schema(state)
-    expect = to_arrow_schema(from_arrow_schema(out_schema))
-    phys = pa.ipc.read_schema(pa.BufferReader(state["schema_ipc"]))
-    ren = state["renames"]
-    gdicts = {c: pa.array(v, pa.string())
-              for c, v in state["gdicts"].items()}
+    out = to_arrow_schema(_spark_schema(state))
+    zone = ["zone_cols", "zone_min_str", "zone_max_str", "zone_min_num",
+            "zone_max_num", "zone_min_dbl", "zone_max_dbl", "zone_nulls"]
+    tbl = pq.read_table(file, columns=["names", "payloads", "n_rows",
+                                       "schema_ipc"]
+                        + (zone if zpred is not None else []))
 
-    need = ["names", "payloads", "n_rows", "schema_ipc"]
-    if zpred is not None:
-        need += ["zone_cols", "zone_min_str", "zone_max_str",
-                 "zone_min_num", "zone_max_num", "zone_min_dbl",
-                 "zone_max_dbl", "zone_nulls"]
-    tbl = pq.read_table(file, columns=need)
-
-    def chunk_keep(row, n_rows):
-        zones = {}
-        zc = row.get("zone_cols")
-        if zc is not None:
-            for j, c in enumerate(zc):
-                zones[c] = (row["zone_min_str"][j],
-                            row["zone_max_str"][j],
-                            row["zone_min_num"][j],
-                            row["zone_max_num"][j],
-                            row["zone_min_dbl"][j],
-                            row["zone_max_dbl"][j],
-                            row["zone_nulls"][j], n_rows)
+    def chunk_keep(row):
+        n_rows = row["n_rows"]
+        zones = {c: (row["zone_min_str"][j], row["zone_max_str"][j],
+                     row["zone_min_num"][j], row["zone_max_num"][j],
+                     row["zone_min_dbl"][j], row["zone_max_dbl"][j],
+                     row["zone_nulls"][j], n_rows)
+                 for j, c in enumerate(row["zone_cols"] or [])}
         if isinstance(zpred, dict):
             return any(all(_part_keep_term(zones, n_rows, t)
                            for t in ts) for ts in zpred["any"])
         return all(_part_keep_term(zones, n_rows, t) for t in zpred)
 
-    for batch in tbl.to_batches():
-        names_col = batch.column(batch.schema.get_field_index("names"))
-        pay_col = batch.column(batch.schema.get_field_index("payloads"))
-        nrows_col = batch.column(batch.schema.get_field_index("n_rows"))
-        ipc_col = batch.column(
-            batch.schema.get_field_index("schema_ipc"))
-        for i in range(batch.num_rows):
-            n_rows = nrows_col[i].as_py()
-            if zpred is not None:
-                row = {c: batch.column(
-                    batch.schema.get_field_index(c))[i].as_py()
-                    for c in need if c.startswith("zone")}
-                if not chunk_keep(row, n_rows):
-                    continue
-            names = names_col[i].as_py()
-            pays = pay_col[i].values
-            # the chunk's own schema carries the PHYSICAL types:
-            # widened columns (alter_table `widen`) decode at their
-            # encoded width (BSS etc. parse width-sensitively),
-            # then upcast exactly — mirrors engine.decode_table
-            chunk_schema = pa.ipc.read_schema(
-                pa.BufferReader(ipc_col[i].as_buffer()))
-            # physical->logical; None = tombstoned (dropped column)
-            keep = {}
-            for j, n in enumerate(names):
-                ln = ren.get(n, n)
-                if ln is not None:
-                    fi = chunk_schema.get_field_index(n)
-                    keep[ln] = (
-                        memoryview(pays[j].as_buffer()).cast("B"),
-                        chunk_schema.field(fi).type if fi >= 0
-                        else None)
-            arrs = []
-            for f in phys:
-                if f.name in keep:
-                    pay, pt = keep[f.name]
-                    arr = decode_column(pay, pt or f.type)
-                    if arr.type != f.type:
-                        arr = arr.cast(f.type)
-                else:
-                    arr = pa.nulls(n_rows, f.type)
-                if f.name in gdicts:
-                    arr = pc.take(gdicts[f.name], arr)
-                arrs.append(arr)
-            out = pa.RecordBatch.from_arrays(arrs, schema=out_schema)
-            yield out if out.schema.equals(expect) else out.cast(expect)
+    if zpred is not None:
+        keep = [chunk_keep(r)
+                for r in tbl.select(["n_rows"] + zone).to_pylist()]
+        if not all(keep):
+            tbl = tbl.filter(pa.array(keep, pa.bool_()))
+    yield from decode_chunk_rows(tbl.to_batches(), out,
+                                 state["renames"], state["gdicts"])
 
 
 class _PartMessage(WriterCommitMessage):
@@ -858,8 +801,7 @@ class EncodedTableDataSource(DataSource):
         return _FORMAT_NAME
 
     def schema(self):
-        from pyspark.sql.pandas.types import from_arrow_schema
-        return from_arrow_schema(_logical_schema(self._read_state()))
+        return _spark_schema(self._read_state())
 
     def reader(self, schema):
         return _EncodedTableReader(self._read_state())

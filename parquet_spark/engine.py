@@ -336,11 +336,90 @@ def decode_chunk(schema_ipc: bytes, names: list[str],
     """Inverse of encode_chunk (pure, Spark-free). `columns` projects to
     a subset without touching the other columns' payloads."""
     schema = pa.ipc.read_schema(pa.BufferReader(schema_ipc))
-    if columns is not None:
-        schema = pa.schema([schema.field(c) for c in columns])
-    cols = [decode_column(p, schema.field(n).type)
-            for n, p in zip(names, payloads)]
-    return pa.RecordBatch.from_arrays(cols, schema=schema)
+    out = schema if columns is None else \
+        pa.schema([schema.field(c) for c in columns])
+    # every projected column is in the chunk: no null-fill, no n_rows
+    return _decode_chunk_to(out, schema, names, payloads, None, {}, {})
+
+
+def _decode_chunk_to(out: pa.Schema, chunk: pa.Schema, names: list[str],
+                     payloads, n_rows: int | None, renames: dict,
+                     dicts: dict[str, pa.Array],
+                     part_id: int | None = None) -> pa.RecordBatch:
+    """THE chunk decoder: every read path (decode_chunk, decode_table,
+    the DataSource V2 batch and streaming readers) ends here, so they
+    cannot diverge.  Builds exactly the `out` batch from one chunk:
+
+      * chunk-physical `names` map to logical names through `renames`
+        (None = dropped column); columns outside `out`, dropped or
+        projected away, are never decompressed;
+      * each column decodes at the type of the chunk's OWN schema
+        `chunk` (alter_table `widen`: BSS and friends parse payloads
+        width-sensitively);
+      * logical columns the chunk lacks (metadata-only add_column)
+        are all-null; `_part_id` is filled with `part_id`;
+      * global-dict columns (`dicts`: name -> value array) restore by
+        pc.take, so a null id stays null;
+      * one safe cast per column to `out`'s type does both the exact
+        widening (int32->int64, float->double; anything lossy raises)
+        and the conform to the Arrow types Spark expects: a tz-naive
+        timestamp would be localized by spark.sql.session.timeZone on
+        ingestion, while naive -> timestamp[us, tz=UTC] is
+        metadata-only, so decode is session-timezone-independent."""
+    stored = {}
+    for n, p in zip(names, payloads):
+        ln = renames.get(n, n)
+        if ln is not None:
+            stored[ln] = (chunk.field(n).type, p)
+    arrs = []
+    for f in out:
+        if f.name in stored:
+            typ, p = stored[f.name]
+            # cast('B'): byte-indexed header parsing needs unsigned
+            arr = decode_column(memoryview(p).cast("B"), typ)
+            if f.name in dicts:
+                arr = pc.take(dicts[f.name], arr)
+        elif f.name == "_part_id" and part_id is not None:
+            arr = pa.array(np.full(n_rows, part_id, dtype=np.int64))
+        else:
+            arr = pa.nulls(n_rows, f.type)
+        arrs.append(arr if arr.type == f.type else arr.cast(f.type))
+    return pa.RecordBatch.from_arrays(arrs, schema=out)
+
+
+def decode_chunk_rows(batches: Iterator[pa.RecordBatch], out: pa.Schema,
+                      renames: dict, gdicts: dict[str, list]
+                      ) -> Iterator[pa.RecordBatch]:
+    """Decode a stream of chunk-row batches (ENCODED_DDL columns
+    schema_ipc/names/payloads/n_rows, plus part_id when `out` has
+    `_part_id`) into one `out` batch per chunk.  Payloads are viewed
+    as zero-copy Arrow buffers, never copied into python `bytes`."""
+    dicts = {c: pa.array(v, pa.string()) for c, v in gdicts.items()
+             if c in out.names}
+    with_pid = "_part_id" in out.names
+    for batch in batches:
+        ipcs, names, pays, n_rows = (batch.column(c) for c in (
+            "schema_ipc", "names", "payloads", "n_rows"))
+        pids = batch.column("part_id") if with_pid else None
+        for i in range(batch.num_rows):
+            yield _decode_chunk_to(
+                out, pa.ipc.read_schema(pa.BufferReader(
+                    ipcs[i].as_buffer())),
+                names[i].as_py(),
+                [p.as_buffer() for p in pays[i].values],
+                n_rows[i].as_py(), renames, dicts,
+                pids[i].as_py() if with_pid else None)
+
+
+def decoded_spark_schema(schema: pa.Schema, gdicts: dict):
+    """The Spark schema a decode of `schema` produces: global-dict
+    columns surface as their VALUE type (string), not the stored ids.
+    `to_arrow_schema` of it is the `out` schema decode_chunk_rows
+    conforms to."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+    return from_arrow_schema(pa.schema([
+        pa.field(f.name, pa.string()) if f.name in gdicts else f
+        for f in schema]))
 
 
 def _chunk_rows_to_batch(chunks: list[dict]) -> pa.RecordBatch:
@@ -631,7 +710,8 @@ def read_encoded_schema(enc_df: DataFrame) -> pa.Schema:
 def decode_table(enc_df: DataFrame, schema: pa.Schema | None = None,
                  columns: list[str] | None = None,
                  with_part_id: bool = False,
-                 renames: dict | None = None) -> DataFrame:
+                 renames: dict | None = None,
+                 gdicts: dict | None = None) -> DataFrame:
     """Decode chunk rows back to the original table. Narrow (no shuffle).
 
     `with_part_id=True` appends a `_part_id` bigint column carrying
@@ -643,17 +723,15 @@ def decode_table(enc_df: DataFrame, schema: pa.Schema | None = None,
     decoded — the projection reaches the "scan", like parquet column
     pruning (a 2-column projection must not pay for `html`).
 
-    `renames` (not None) switches to the SCHEMA-EVOLUTION decoder
-    (manifest.alter_table): chunk-physical column names are mapped
-    through the dict (value None = dropped/tombstoned), columns in
-    `schema` absent from a chunk decode as all-null (metadata-only
-    add_column), and chunk columns outside `schema` are skipped without
-    decompression (metadata-only drop_column).  `schema` is then
-    REQUIRED and must carry the evolved logical names/types."""
-    from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
-    if renames is not None and schema is None:
-        raise ValueError("the schema-evolution decoder needs the "
-                         "snapshot's evolved schema")
+    `schema` (default: the first chunk's) names the logical columns and
+    types; on an evolved table (manifest.alter_table) it is the
+    snapshot's evolved schema, and `renames` maps chunk-physical names
+    to it (value None = dropped; empty = identity).  `gdicts` is the
+    snapshot's global dictionaries (column -> values by id): those
+    columns come back as their string values, restored executor-side
+    inside the same decode (null ids stay null).  Every chunk goes
+    through _decode_chunk_to."""
+    from pyspark.sql.pandas.types import to_arrow_schema
     schema = schema or read_encoded_schema(enc_df)
     if columns is not None:
         missing = [c for c in columns if schema.get_field_index(c) < 0]
@@ -662,119 +740,13 @@ def decode_table(enc_df: DataFrame, schema: pa.Schema | None = None,
         schema = pa.schema([schema.field(c) for c in columns])
     if with_part_id:
         schema = schema.append(pa.field("_part_id", pa.int64()))
-    spark_schema = from_arrow_schema(schema)
-    # Conform decoded batches to the Arrow schema Spark EXPECTS for the
-    # declared types (timestamp[us, tz=UTC] for TIMESTAMP).  Stored
-    # tz-NAIVE timestamps otherwise reach Spark as naive arrays, which
-    # mapInArrow ingestion localizes by spark.sql.session.timeZone —
-    # silently shifting every value under a non-UTC session.  The
-    # naive->tz=UTC Arrow cast is metadata-only (int64 micros unchanged,
-    # interpreted as UTC — the zone-domain convention), so decode is
-    # session-timezone-independent and effectively free.
-    _expect = to_arrow_schema(spark_schema)
-
-    def _conform(b: pa.RecordBatch) -> pa.RecordBatch:
-        return b if b.schema.equals(_expect) else b.cast(_expect)
-
-    want = columns
-
-    if renames is not None:
-        out_schema = schema
-        data_fields = [f for f in schema if f.name != "_part_id"]
-        ren = dict(renames)
-
-        def evolved(batches: Iterator[pa.RecordBatch]) \
-                -> Iterator[pa.RecordBatch]:
-            for batch in batches:
-                ipc_col = batch.column(
-                    batch.schema.get_field_index("schema_ipc"))
-                names_col = batch.column(
-                    batch.schema.get_field_index("names"))
-                pay_col = batch.column(
-                    batch.schema.get_field_index("payloads"))
-                pid_col = batch.column(
-                    batch.schema.get_field_index("part_id"))
-                nrows_col = batch.column(
-                    batch.schema.get_field_index("n_rows"))
-                for i in range(batch.num_rows):
-                    names = names_col[i].as_py()
-                    pays = pay_col[i].values
-                    # the chunk's OWN schema carries the physical types:
-                    # type-widened columns (alter_table `widen`) must
-                    # decode at their ENCODED width — several codecs
-                    # (BSS byte-stream-split foremost) parse payloads
-                    # width-sensitively — and upcast afterwards
-                    chunk_schema = pa.ipc.read_schema(
-                        pa.BufferReader(ipc_col[i].as_buffer()))
-                    # physical -> logical; None = tombstoned (dropped):
-                    # skipped without decompression, like any column
-                    # outside the projection
-                    keep = {}
-                    for j, n in enumerate(names):
-                        ln = ren.get(n, n)
-                        if ln is not None:
-                            fi = chunk_schema.get_field_index(n)
-                            keep[ln] = (
-                                memoryview(pays[j].as_buffer()).cast("B"),
-                                chunk_schema.field(fi).type
-                                if fi >= 0 else None)
-                    n_rows = nrows_col[i].as_py()
-
-                    def dec(f):
-                        pay, pt = keep[f.name]
-                        arr = decode_column(pay, pt or f.type)
-                        # exact widening (int32->int64, float->double);
-                        # safe cast raises on anything lossy
-                        return arr if arr.type == f.type \
-                            else arr.cast(f.type)
-
-                    arrs = [dec(f) if f.name in keep
-                            else pa.nulls(n_rows, f.type)
-                            for f in data_fields]
-                    if with_part_id:
-                        arrs.append(pa.array(np.full(
-                            n_rows, pid_col[i].as_py(), dtype=np.int64)))
-                    yield _conform(pa.RecordBatch.from_arrays(
-                        arrs, schema=out_schema))
-
-        return enc_df.mapInArrow(evolved, spark_schema)
-
-    def decoder(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            # index the Arrow buffers directly: payload bytes are viewed
-            # (BinaryScalar.as_buffer -> zero-copy memoryview), never
-            # round-tripped through python `bytes` objects — to_pylist
-            # here would copy every compressed payload once per chunk
-            ipc_col = batch.column(batch.schema.get_field_index("schema_ipc"))
-            names_col = batch.column(batch.schema.get_field_index("names"))
-            pay_col = batch.column(batch.schema.get_field_index("payloads"))
-            pid_col = batch.column(batch.schema.get_field_index("part_id"))
-            for i in range(batch.num_rows):
-                names = names_col[i].as_py()
-                pays = pay_col[i].values
-                # cast('B'): pa.Buffer's memoryview is signed char;
-                # byte-indexed header parsing needs unsigned
-                payloads = [memoryview(pays[j].as_buffer()).cast("B")
-                            for j in range(len(pays))]
-                if want is not None:
-                    keep = {n: p for n, p in zip(names, payloads)
-                            if n in want}
-                    names = list(want)
-                    payloads = [keep[n] for n in want]
-                out = decode_chunk(memoryview(ipc_col[i].as_buffer()),
-                                   names, payloads, columns=want)
-                if with_part_id:
-                    pid = pa.array(np.full(out.num_rows,
-                                           pid_col[i].as_py(),
-                                           dtype=np.int64))
-                    out = pa.RecordBatch.from_arrays(
-                        [*out.columns, pid],
-                        schema=pa.schema([*out.schema,
-                                          pa.field("_part_id",
-                                                   pa.int64())]))
-                yield _conform(out)
-
-    return enc_df.mapInArrow(decoder, spark_schema)
+    gdicts = {c: v for c, v in (gdicts or {}).items() if c in schema.names}
+    spark_schema = decoded_spark_schema(schema, gdicts)
+    out = to_arrow_schema(spark_schema)
+    ren = dict(renames or {})
+    return enc_df.mapInArrow(
+        lambda batches: decode_chunk_rows(batches, out, ren, gdicts),
+        spark_schema)
 
 
 def _is_numeric_bound(v) -> bool:
@@ -1105,6 +1077,13 @@ def _residual_col(col: str, types: dict[str, str], numeric: bool):
 
 
 def _residual_cond(dec: DataFrame, terms) -> "F.Column":
+    """The exact filter for a predicate on decoded rows: an AND-list of
+    terms, or {"any": [and_list, ...]} (OR of the branches)."""
+    if isinstance(terms, dict):
+        cond = F.lit(False)
+        for branch in terms["any"]:
+            cond = cond | _residual_cond(dec, branch)
+        return cond
     cond = F.lit(True)
     types = {f.name: f.dataType.simpleString() for f in dec.schema.fields}
     for term in terms:
@@ -1279,16 +1258,11 @@ def scan_filtered(enc_df: DataFrame, pred: list[tuple] | dict,
     the stored columns are int ids, so a value-space predicate here
     would silently match nothing.  Use manifest.scan_table for
     dict-aware scans (it translates predicates to id space for pruning
-    and restores values before the residual)."""
+    and hands the snapshot's dictionaries to the same decode kernel,
+    which restores values before the residual)."""
     kept = prune_chunks_pred(enc_df, pred)
     dec = decode_table(kept, schema=schema, columns=columns)
-    if isinstance(pred, dict):
-        cond = F.lit(False)
-        for terms in pred["any"]:
-            cond = cond | _residual_cond(dec, terms)
-    else:
-        cond = _residual_cond(dec, pred)
-    return dec.where(cond)
+    return dec.where(_residual_cond(dec, pred))
 
 
 def read_row(enc_df: DataFrame, row_idx: int,
@@ -1334,11 +1308,8 @@ def read_row(enc_df: DataFrame, row_idx: int,
     row = (enc_df.where((F.col("part_id") == pid)
                         & (F.col("chunk_id") == cursor.chunk_id))
            .select(*sel).head())
-    names, payloads = row.names, row.payloads
-    if columns is not None:
-        keep = {n: p for n, p in zip(names, payloads) if n in columns}
-        names, payloads = list(columns), [keep[c] for c in columns]
-    batch = decode_chunk(row.schema_ipc, names, payloads, columns=columns)
+    batch = decode_chunk(row.schema_ipc, row.names, row.payloads,
+                         columns=columns)
     return {n: batch.column(i)[offset].as_py()
             for i, n in enumerate(batch.schema.names)}
 

@@ -665,8 +665,6 @@ def _check_resume_layout(snap: dict | None, want: dict, table_path: str):
 
 
 _GDICT_MAX_META = 65_536  # a global dict lives in the snapshot manifest
-_GDICT_LITERAL_MAX = 1024  # restore via literal array up to here; bigger
-#                            dictionaries restore via a broadcast join
 
 
 _RANGE_SAMPLE_MAX = 100_000  # boundary-sample rows collected to driver
@@ -1109,8 +1107,7 @@ def write_encoded(df: DataFrame, table_path: str,
     for carry in ("delete_files", "n_deleted"):
         if pmeta.get(carry):
             meta[carry] = pmeta[carry]
-    # schema-evolution state survives appends ({} is meaningful: it
-    # arms the evolution decoder for null-filling added columns)
+    # schema-evolution state survives appends
     if pmeta.get("renames") is not None:
         meta["renames"] = pmeta["renames"]
     # the streaming sink's exactly-once fence survives library appends
@@ -1838,7 +1835,7 @@ def alter_table(table_path: str,
     - `widen`: {col: wider_type} — Iceberg-parity type promotion
       (int8/16/32 -> any wider signed int, float32 -> float64), also
       metadata-only: the snapshot schema changes, old chunks keep their
-      encoded payloads, and the evolution decoder decodes each chunk at
+      encoded payloads, and the chunk decoder decodes each chunk at
       its OWN physical width (several codecs — BSS byte-stream-split
       foremost — parse payloads width-sensitively) before an exact
       upcast.  Narrowing or cross-family changes raise.  Appends after
@@ -1850,8 +1847,8 @@ def alter_table(table_path: str,
       physically; widening the VALUE type is meaningless there.
 
     Mechanics: the snapshot's `meta["renames"]` maps chunk-PHYSICAL
-    names to current LOGICAL names (value None = tombstoned drop); its
-    presence arms the evolution decoder in decode_table, and scan_table
+    names to current LOGICAL names (value None = tombstoned drop); the
+    chunk decoder (engine._decode_chunk_to) maps through it, and scan_table
     expands each logical predicate into an AND over the column's
     physical aliases so zone/bloom/file pruning keeps biting on old
     parts (absent names keep conservatively, so the conjunction is
@@ -2086,7 +2083,7 @@ def export_parquet(spark: SparkSession, table_path: str, dst_path: str,
 
     `partition_by` hive-partitions the output (lang/domain/day are the
     usual cuts) so downstream engines get directory-level pruning;
-    global-dict columns export as their VALUES (read_decoded restores
+    global-dict columns export as their VALUES (the decoder restores
     them), renames/evolution resolve to logical names, and pending
     equality deletes are applied — the consumer sees exactly what a
     reader of this engine sees.  Refuses to overwrite an existing
@@ -2101,12 +2098,9 @@ def export_parquet(spark: SparkSession, table_path: str, dst_path: str,
     snap = _resolve_snap(table, snapshot_id, ref)
     if snap is None:
         raise ValueError(f"no committed snapshot at {table_path}")
-    dec = read_decoded(spark, table_path, columns=columns,
-                       backend=backend,
-                       snapshot_id=snap["snapshot_id"]
-                       if ref is None else None,
-                       ref=ref)
-    w = dec.write.mode("error")
+    # decode THIS resolved snapshot: re-resolving `ref` could read a
+    # branch that moved since, and mislabel the rows' snapshot_id
+    w = _decode_snapshot(spark, table, snap, columns).write.mode("error")
     if max_records_per_file:
         w = w.option("maxRecordsPerFile", int(max_records_per_file))
     if partition_by:
@@ -2815,60 +2809,46 @@ def read_decoded(spark: SparkSession, table_path: str,
     THAT snapshot apply, so time travel sees exactly what a reader saw
     then).  Columns written with `global_dict_cols` are transparently
     restored from int ids to their values via the dictionary persisted
-    in the snapshot meta (a literal array lookup — codegen, no join,
-    no shuffle).  `ref="name"` reads the snapshot a named tag/branch
-    pins (create_ref) — the reproducible-training-dataset handle."""
+    in the snapshot meta, inside the executor-side decode (one pc.take
+    per chunk — no join, no shuffle).  `ref="name"` reads the snapshot
+    a named tag/branch pins (create_ref) — the
+    reproducible-training-dataset handle."""
     table = EncodedTable(table_path, backend=backend)
-    snap = _resolve_snap(table, snapshot_id, ref)
-    files = table.data_files(snap)
-    if not files:
-        raise ValueError(f"no committed snapshot at {table_path}")
+    return _decode_snapshot(spark, table,
+                            _resolve_snap(table, snapshot_id, ref), columns)
+
+
+def _decode_snapshot(spark: SparkSession, table: "EncodedTable",
+                     snap: dict | None, columns: list[str] | None,
+                     files: list[str] | None = None,
+                     zpred: list[tuple] | dict | None = None) -> DataFrame:
+    """Decoded rows of an already-RESOLVED snapshot — never re-resolves
+    a ref, so a caller's reported snapshot id always names the rows it
+    returns.  The snapshot's schema, renames and global dictionaries
+    drive the decode; pending equality deletes are applied (the layout
+    key decodes too when the projection excludes it, and is dropped
+    again).  `files` narrows to some of the snapshot's part files
+    (default: all of them); `zpred` prunes chunks by zone maps."""
+    if files is None:
+        files = table.data_files(snap)
+        if not files:
+            raise ValueError(f"no committed snapshot at {table.path}")
     enc = spark.read.schema(ENCODED_DDL).parquet(*files)
+    if zpred is not None:
+        enc = prune_chunks_pred(enc, zpred)
     meta = table.meta(snap)
-    # pending deletes anti-join on the layout key: decode those columns
-    # too when the projection excludes them, drop them afterwards
     has_deletes = bool(meta.get("delete_files"))
     key = ((_layout_of(snap) or {}).get("key") if has_deletes else None) \
         or []
     extra = [k for k in key if columns is not None and k not in columns]
-    dec_cols = columns + extra if columns is not None and extra else columns
-    dec = decode_table(enc, table.schema(snap), columns=dec_cols,
+    dec = decode_table(enc, table.schema(snap),
+                       columns=columns + extra if extra else columns,
                        with_part_id=has_deletes,
-                       renames=meta.get("renames"))
-    dec = _restore_global_dicts(
-        spark, dec, meta.get("global_dicts") or {}, dec_cols)
+                       renames=meta.get("renames"),
+                       gdicts=meta.get("global_dicts"))
     if has_deletes:
         dec = _apply_deletes(spark, dec, meta)
     return dec.drop(*extra) if extra else dec
-
-
-def _restore_global_dicts(spark: SparkSession, dec: DataFrame,
-                          gdicts: dict[str, list],
-                          columns: list[str] | None = None) -> DataFrame:
-    """Restore global-dict int-id columns to their values via the
-    persisted dictionary (shared by read_decoded and scan_table)."""
-    for c, vals in gdicts.items():
-        if columns is not None and c not in columns:
-            continue
-        if len(vals) <= _GDICT_LITERAL_MAX:
-            arr = F.array(*[F.lit(v) for v in vals])
-            # explicit null guard: Spark 4.1's element_at resolves a
-            # NULL index to the LAST element instead of NULL (observed
-            # on plain DataFrames too), which would resurrect null ids
-            dec = dec.withColumn(c, F.when(F.col(c).isNotNull(),
-                                           F.element_at(arr, F.col(c) + 1)))
-        else:
-            # big dictionaries restore via a broadcast join: a literal
-            # array with tens of thousands of children would blow the
-            # codegen method-size limit and bloat every serialized plan
-            cols = dec.columns
-            d = F.broadcast(spark.createDataFrame(
-                [(i, v) for i, v in enumerate(vals)],
-                f"`{c}` int, `__gdict_val` string"))
-            dec = (dec.join(d, on=c, how="left").drop(c)
-                   .withColumnRenamed("__gdict_val", c)
-                   .select(*cols))
-    return dec
 
 
 # widest value-range on a dict column that still translates to an id
@@ -3083,15 +3063,8 @@ def count_where(spark: SparkSession, table_path: str,
                            keep & ~full, st["pairs"])
     dec = decode_table(bnd, table.schema(snap),
                        columns=_pred_columns(pred),
-                       renames=meta.get("renames"))
-    dec = _restore_global_dicts(spark, dec, gdicts, dec.columns)
-    if isinstance(pred, dict):
-        cond = F.lit(False)
-        for terms in pred["any"]:
-            cond = cond | _residual_cond(dec, terms)
-    else:
-        cond = _residual_cond(dec, pred)
-    return meta_n + dec.where(cond).count()
+                       renames=renames, gdicts=gdicts)
+    return meta_n + dec.where(_residual_cond(dec, pred)).count()
 
 
 def _pred_columns(pred: list[tuple] | dict) -> list[str]:
@@ -3274,16 +3247,9 @@ def minmax_where(spark: SparkSession, table_path: str,
     proj = list(dict.fromkeys(_pred_columns(pred) + list(cols)))
     bnd = _boundary_chunks(spark, table, snap, files, enc,
                            keep & ~eligible, m["_bnd"])
-    dec = decode_table(bnd, schema,
-                       columns=proj, renames=meta.get("renames"))
-    dec = _restore_global_dicts(spark, dec, gdicts, dec.columns)
-    if isinstance(pred, dict):
-        cond = F.lit(False)
-        for terms in pred["any"]:
-            cond = cond | _residual_cond(dec, terms)
-    else:
-        cond = _residual_cond(dec, pred)
-    dec = dec.where(cond)
+    dec = decode_table(bnd, schema, columns=proj, renames=renames,
+                       gdicts=gdicts)
+    dec = dec.where(_residual_cond(dec, pred))
     types = {f.name: f.dataType.simpleString() for f in dec.schema.fields}
     paggs = [F.count(F.lit(1)).alias("_n")]
     for c in cols:
@@ -3384,16 +3350,9 @@ def _sum_count_where(spark: SparkSession, table_path: str, col: str,
     proj = list(dict.fromkeys(_pred_columns(pred) + [col]))
     bnd = _boundary_chunks(spark, table, snap, files, enc,
                            keep & ~eligible, st["pairs"])
-    dec = decode_table(bnd, schema, columns=proj,
-                       renames=meta.get("renames"))
-    dec = _restore_global_dicts(spark, dec, gdicts, dec.columns)
-    if isinstance(pred, dict):
-        cond = F.lit(False)
-        for terms in pred["any"]:
-            cond = cond | _residual_cond(dec, terms)
-    else:
-        cond = _residual_cond(dec, pred)
-    r = (dec.where(cond)
+    dec = decode_table(bnd, schema, columns=proj, renames=renames,
+                       gdicts=gdicts)
+    r = (dec.where(_residual_cond(dec, pred))
          .agg(F.sum(F.col(col).cast("decimal(38,0)")).alias("_s"),
               F.count(col).alias("_c")).head())
     return meta_sum + int(r["_s"] or 0), meta_n + int(r["_c"])
@@ -3470,43 +3429,23 @@ def scan_table(spark: SparkSession, table_path: str,
     (col, "=", v) / (col, "in", [v...]), or {"any": [and_list, ...]}."""
     table = EncodedTable(table_path, backend=backend)
     snap = _resolve_snap(table, snapshot_id, ref)
-    gdicts = table.meta(snap).get("global_dicts") or {}
-    renames = table.meta(snap).get("renames") or {}
-    zpred = _translate_pred(pred, gdicts, renames)
+    meta = table.meta(snap)
+    zpred = _translate_pred(pred, meta.get("global_dicts") or {},
+                            meta.get("renames") or {})
     # file-level prune from the manifest's per-part zone summaries
     # BEFORE any Spark job: skipped part files are never even listed
     files = _prune_parts(table.committed_parts(snap), zpred)
     if not files:
         # no file can match: an empty frame with the RESOLVED
-        # snapshot's shape (ref/tag/branch included — dropping `ref`
-        # here would crash on branch-only tables and return CURRENT's
-        # schema for tag reads)
-        dec0 = read_decoded(spark, table_path, columns=columns,
-                            backend=backend, snapshot_id=snapshot_id,
-                            ref=ref)
-        return dec0.limit(0)
-    enc = spark.read.schema(ENCODED_DDL).parquet(*files)
-    kept = prune_chunks_pred(enc, zpred)
-    meta = table.meta(snap)
-    has_deletes = bool(meta.get("delete_files"))
-    key = ((_layout_of(snap) or {}).get("key") if has_deletes else None) \
-        or []
-    extra = [k for k in key if columns is not None and k not in columns]
-    dec_cols = columns + extra if columns is not None and extra else columns
-    dec = decode_table(kept, table.schema(snap), columns=dec_cols,
-                       with_part_id=has_deletes,
-                       renames=table.meta(snap).get("renames"))
-    dec = _restore_global_dicts(spark, dec, gdicts, dec_cols)
-    if has_deletes:
-        dec = _apply_deletes(spark, dec, meta)
-    if isinstance(pred, dict):
-        cond = F.lit(False)
-        for terms in pred["any"]:
-            cond = cond | _residual_cond(dec, terms)
-    else:
-        cond = _residual_cond(dec, pred)
-    out = dec.where(cond)
-    return out.drop(*extra) if extra else out
+        # snapshot's shape (a tag/branch read must not fall back to
+        # CURRENT's schema, nor re-resolve a moving branch)
+        return _decode_snapshot(spark, table, snap, columns).limit(0)
+    # predicate columns outside the projection decode for the residual
+    proj = None if columns is None else \
+        list(dict.fromkeys(list(columns) + _pred_columns(pred)))
+    dec = _decode_snapshot(spark, table, snap, proj, files, zpred)
+    out = dec.where(_residual_cond(dec, pred))
+    return out if proj == columns else out.select(*columns)
 
 
 def read_increment(spark: SparkSession, table_path: str,
@@ -3566,16 +3505,9 @@ def read_increment(spark: SparkSession, table_path: str,
     new_files = [info["file"] for pid, info in to_parts.items()
                  if pid not in from_parts]
     if not new_files:
-        # empty increment with the full decoded schema
-        return read_decoded(spark, table_path, columns=columns,
-                            backend=backend,
-                            snapshot_id=to_snap["snapshot_id"]).limit(0)
-    enc = spark.read.schema(ENCODED_DDL).parquet(*new_files)
-    dec = decode_table(enc, table.schema(to_snap), columns=columns,
-                       renames=(to_snap.get("meta") or {}).get("renames"))
-    return _restore_global_dicts(
-        spark, dec, (to_snap.get("meta") or {}).get("global_dicts") or {},
-        columns)
+        # empty increment with TO's decoded schema
+        return _decode_snapshot(spark, table, to_snap, columns).limit(0)
+    return _decode_snapshot(spark, table, to_snap, columns, new_files)
 
 
 def _head_files(parts: dict[str, dict], key0: str, need: int
@@ -3690,9 +3622,7 @@ def read_head(spark: SparkSession, table_path: str, k: int,
     else:
         files, _, tau_f = _head_files(snap["parts"], key[0], need)
     if not files:
-        return read_decoded(spark, table_path, columns=columns,
-                            backend=backend,
-                            snapshot_id=snap["snapshot_id"]).limit(0)
+        return _decode_snapshot(spark, table, snap, columns).limit(0)
     enc = spark.read.schema(ENCODED_DDL).parquet(*files)
     # chunk-level prune, SAME tau argument re-derived at chunk
     # granularity: ONE metadata-only job collects the selected files'
@@ -3758,10 +3688,8 @@ def read_head(spark: SparkSession, table_path: str, k: int,
     proj = None if columns is None else \
         list(dict.fromkeys(list(columns) + list(key)))
     dec = decode_table(bnd, table.schema(snap), columns=proj,
-                       with_part_id=has_deletes,
-                       renames=meta.get("renames"))
-    dec = _restore_global_dicts(spark, dec,
-                                meta.get("global_dicts") or {}, proj)
+                       with_part_id=has_deletes, renames=renames,
+                       gdicts=meta.get("global_dicts"))
     if has_deletes:
         dec = _apply_deletes(spark, dec, meta)
     out = dec.orderBy(*[F.asc(c) for c in key]).limit(k)
@@ -3782,9 +3710,8 @@ def read_head(spark: SparkSession, table_path: str, k: int,
                 *_prune_parts(snap["parts"], []))
             dec = decode_table(enc_all, table.schema(snap),
                                columns=proj, with_part_id=True,
-                               renames=meta.get("renames"))
-            dec = _restore_global_dicts(
-                spark, dec, meta.get("global_dicts") or {}, proj)
+                               renames=renames,
+                               gdicts=meta.get("global_dicts"))
             dec = _apply_deletes(spark, dec, meta)
             out = dec.orderBy(*[F.asc(c) for c in key]).limit(k)
     if columns is not None:
@@ -3864,9 +3791,8 @@ def read_changelog(spark: SparkSession, table_path: str,
         if new_files:
             enc = spark.read.schema(ENCODED_DDL).parquet(*new_files)
             dec = decode_table(enc, table.schema(snap), columns=columns,
-                               renames=meta_s.get("renames"))
-            dec = _restore_global_dicts(
-                spark, dec, meta_s.get("global_dicts") or {}, columns)
+                               renames=meta_s.get("renames"),
+                               gdicts=meta_s.get("global_dicts"))
             pieces.append(stamp(dec, "insert", sid))
         dels_parent = (parent.get("meta") or {}).get("delete_files") or []
         new_dels = [d for d in (meta_s.get("delete_files") or [])
@@ -3881,9 +3807,8 @@ def read_changelog(spark: SparkSession, table_path: str,
             pmeta = parent.get("meta") or {}
             dec = decode_table(enc, table.schema(parent), columns=proj,
                                with_part_id=True,
-                               renames=pmeta.get("renames"))
-            dec = _restore_global_dicts(
-                spark, dec, pmeta.get("global_dicts") or {}, proj)
+                               renames=pmeta.get("renames"),
+                               gdicts=pmeta.get("global_dicts"))
             # pre-image = parent-VISIBLE rows hit by the new keys:
             # semi-join the new delete keys, anti-join the old ones
             # (shared _delete_key_frame/_delete_match_cond — the SAME
@@ -3900,9 +3825,7 @@ def read_changelog(spark: SparkSession, table_path: str,
                 dec = dec.select(*columns)
             pieces.append(stamp(dec, "delete", sid))
     if not pieces:
-        base = read_decoded(spark, table_path, columns=columns,
-                            backend=backend,
-                            snapshot_id=to_snap["snapshot_id"]).limit(0)
+        base = _decode_snapshot(spark, table, to_snap, columns).limit(0)
         return stamp(base, "insert", to_snap["snapshot_id"]).limit(0)
     out = pieces[0]
     for p in pieces[1:]:

@@ -111,3 +111,37 @@ def test_export_parquet_faithful_and_partitioned(spark, tmp_path):
 
     with pytest.raises(ValueError, match="not empty"):
         export_parquet(spark, path, dst)
+
+
+def test_export_parquet_pins_the_resolved_branch_snapshot(spark, tmp_path,
+                                                          monkeypatch):
+    """A branch ref that moves between export_parquet's resolve and its
+    read must not mix states: the exported rows are exactly the
+    snapshot the returned snapshot_id names."""
+    import parquet_spark.manifest as M
+    from parquet_spark.manifest import create_ref, export_parquet
+
+    path = str(tmp_path / "t")
+    write_encoded(_docs(spark, 0, 300), path, key=["doc_id"], n_parts=2)
+    delete_rows(spark, path, [("doc_id", "in", [11, 12])])   # snapshot 1
+    create_ref(path, "b", snapshot_id=0, kind="branch")
+
+    resolve = M._resolve_snap
+    moved = []
+
+    def resolve_then_move(table, snapshot_id, ref=None):
+        snap = resolve(table, snapshot_id, ref)
+        if ref == "b" and not moved:
+            # a concurrent publisher moves the branch right after the
+            # export resolved it
+            create_ref(path, "b", snapshot_id=1, kind="branch")
+            moved.append(True)
+        return snap
+
+    monkeypatch.setattr(M, "_resolve_snap", resolve_then_move)
+    dst = str(tmp_path / "exp")
+    rep = export_parquet(spark, path, dst, ref="b")
+    assert moved and rep["snapshot_id"] == 0
+    back = spark.read.parquet(dst)
+    assert back.count() == 300
+    assert back.where(F.col("doc_id").isin(11, 12)).count() == 2

@@ -438,6 +438,44 @@ def test_scan_table_dict_aware(spark, tmp_path, monkeypatch):
 
 
 @pytest.mark.spark
+def test_large_global_dict_restores_in_the_decoder(spark, tmp_path):
+    """A global dictionary past 1,024 values (too big for a literal
+    array restore in codegen) restores inside the executor-side chunk
+    decoder on every read surface: no join in the plan, and null ids
+    stay null."""
+    from parquet_spark.datasource import register
+    from parquet_spark.manifest import scan_table
+
+    df = spark.range(4000).select(
+        F.col("id").alias("doc_id"),
+        F.when(F.col("id") % 37 != 0,
+               F.format_string("c%04d", F.col("id") % 1500)).alias("cat"))
+    path = str(tmp_path / "tbl")
+    write_encoded(df, path, key=["doc_id"], n_parts=2, rows_per_chunk=500,
+                  global_dict_cols=["cat"])
+    assert len(EncodedTable(path).meta()["global_dicts"]["cat"]) > 1024
+
+    def same(a, b):
+        return a.exceptAll(b).count() == 0 == b.exceptAll(a).count()
+
+    dec = read_decoded(spark, path)
+    assert dec.schema["cat"].dataType.simpleString() == "string"
+    assert same(dec, df)
+    assert dec.where(F.col("cat").isNull()).count() == 109  # 4000 / 37
+    dec.collect()
+    plan = dec._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan, plan[:2000]
+    # value-space equality and prefix on the dict column
+    assert same(scan_table(spark, path, [("cat", "=", "c1234")]),
+                df.where(F.col("cat") == "c1234"))
+    pre = scan_table(spark, path, [("cat", "prefix", "c14")])
+    assert pre.count() > 0
+    assert same(pre, df.where(F.col("cat").startswith("c14")))
+    register(spark)
+    assert same(spark.read.format("parquet_spark").load(path), df)
+
+
+@pytest.mark.spark
 def test_global_dict_over_cap_falls_back_to_per_chunk(spark, monkeypatch):
     """A column whose cardinality crosses the manifest dictionary cap
     must NOT crash the write: it falls back to per-chunk dictionary

@@ -474,11 +474,24 @@ def test_top_vocabulary_deterministic_ranking(spark):
     from parquet_spark.textops.textstats import top_vocabulary
     df = spark.createDataFrame(
         [(0, "b a a c b a"), (1, "c b  d")], "doc_id int, text string")
-    out = [(r.rank, r.word, r.n) for r in
-           top_vocabulary(df, k=10).orderBy("rank").collect()]
+    top = top_vocabulary(df, k=10)
+    out = [(r.rank, r.word, r.n) for r in top.orderBy("rank").collect()]
     # a:3 b:3 c:2 d:1 — ties broken word-asc; empty token (double
     # space) excluded
     assert out == [(1, "a", 3), (2, "b", 3), (3, "c", 2), (4, "d", 1)]
+    top.collect()
+    _assert_bounded_topk(top._jdf.queryExecution().executedPlan()
+                         .toString(), 10)
+
+
+def _assert_bounded_topk(plan: str, k: int) -> None:
+    """The rank <= k filter over a window became a bounded top-k in the
+    physical plan: WindowGroupLimit for a partitioned window, and for a
+    global window Spark pushes the limit below it as
+    TakeOrderedAndProject(limit=k).  Either way only k rows per group
+    reach the window, never the whole sorted input."""
+    assert ("WindowGroupLimit" in plan
+            or f"TakeOrderedAndProject(limit={k}," in plan), plan[:2000]
 
 
 @pytest.mark.spark
@@ -760,7 +773,7 @@ def test_token_index_prefix_search(spark, tmp_path):
 
 
 @pytest.mark.spark
-def test_bigram_lm_train_counts_and_caps(spark):
+def test_bigram_lm_train_counts_and_caps(spark, monkeypatch):
     """train_bigram_lm on a hand-countable corpus: exact unigram/bigram
     counts, deterministic (count desc, word asc) vocab cut, and the
     invariant that no bigram key escapes the vocabulary (OOV tokens are
@@ -768,7 +781,22 @@ def test_bigram_lm_train_counts_and_caps(spark):
     from parquet_spark.textops.textstats import train_bigram_lm
     rows = [(1, "a b a b c"), (2, "a b z"), (3, "c a")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    # record the executed plan of every frame the trainer collects
+    plans = []
+    frame = type(df)
+    collect = frame.collect
+
+    def recording_collect(self):
+        rows = collect(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    monkeypatch.setattr(frame, "collect", recording_collect)
     lm = train_bigram_lm(df, vocab_size=3, bigram_cap=16)
+    monkeypatch.undo()
+    # both cuts (vocab_size, bigram_cap) are bounded top-k plans
+    _assert_bounded_topk(plans[0], 3)
+    _assert_bounded_topk(plans[-1], 16)
     # counts: a=4 b=3 c=2 z=1 -> vocab cap 3 drops z
     assert lm["vocab"] == {"a": 4, "b": 3, "c": 2}
     assert lm["n_tokens"] == 10
