@@ -33,10 +33,12 @@ Execution shape (scale notes):
   semantics like null-handling and collation stay Spark's.
 * ``read(partition)`` — executor-side: pyarrow reads ONLY the needed
   top-level columns of the chunk container (names/payloads/n_rows +
-  zone arrays when filters were pushed), each chunk row is zone-tested
-  in pure python (the per-part summary test _part_keep_term applied at
-  chunk granularity; Bloom filters are skipped — conservative), and
-  surviving chunks decode through the engine's one chunk-decode kernel
+  zone arrays, plus the Bloom filters when a string =/IN filter was
+  pushed), each chunk row is tested in pure python with the chunk
+  semantics of scan_table's prune_chunks_pred (the per-part summary
+  test _part_keep_term applied at chunk granularity, and
+  engine._bloom_keep for string =/IN terms), and surviving chunks
+  decode through the engine's one chunk-decode kernel
   (``engine.decode_chunk_rows``), the same function decode_table's
   mapInArrow runs — one implementation, not a mirror.  That kernel
   does all of: column projection (unselected payloads are never
@@ -129,10 +131,15 @@ def _translate_filter(f):
         # zone maps store timestamps as epoch-us ints; Catalyst hands
         # datetime literals for timestamp comparisons
         import datetime
+
+        from .engine import _is_numeric_bound
         if isinstance(v, datetime.datetime):
             epoch = datetime.datetime(
                 1970, 1, 1, tzinfo=v.tzinfo if v.tzinfo else None)
             return int((v - epoch).total_seconds() * 1_000_000)
+        # a bool (where(flag)) or NaN raises: no zone map can prune by
+        # it, so pushFilters drops the filter
+        _is_numeric_bound(v)
         return v
 
     if isinstance(f, EqualTo):
@@ -210,7 +217,9 @@ class _EncodedTableReader(DataSourceReader):
 def _read_part_file(file: str, state: dict, zpred):
     """Executor-side decode of ONE part file to Arrow RecordBatches —
     shared by the batch reader and the streaming source.  Chunk-level
-    zone pruning (zpred not None) happens before any decompression;
+    pruning (zpred not None) happens before any decompression, with
+    engine._zone_keep_term's semantics: the zone test, plus the chunk's
+    Bloom filter for string/binary =/IN terms (engine._bloom_term);
     surviving chunks go through the engine's decode kernel
     (engine.decode_chunk_rows: evolution, global-dict restore and the
     conform to Spark's Arrow types, exactly as decode_table)."""
@@ -218,15 +227,21 @@ def _read_part_file(file: str, state: dict, zpred):
 
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from .engine import decode_chunk_rows
+    from .engine import _bloom_keep, _bloom_term, decode_chunk_rows
     from .manifest import _part_keep_term
 
     out = to_arrow_schema(_spark_schema(state))
-    zone = ["zone_cols", "zone_min_str", "zone_max_str", "zone_min_num",
-            "zone_max_num", "zone_min_dbl", "zone_max_dbl", "zone_nulls"]
-    tbl = pq.read_table(file, columns=["names", "payloads", "n_rows",
-                                       "schema_ipc"]
-                        + (zone if zpred is not None else []))
+    cols = ["n_rows"]
+    if zpred is not None:
+        cols += ["zone_cols", "zone_min_str", "zone_max_str",
+                 "zone_min_num", "zone_max_num", "zone_min_dbl",
+                 "zone_max_dbl", "zone_nulls"]
+        branches = [[(t, _bloom_term(t)) for t in ts] for ts in
+                    (zpred["any"] if isinstance(zpred, dict) else [zpred])]
+        if any(b for ts in branches for _, b in ts):
+            cols += ["bloom_cols", "blooms"]
+    tbl = pq.read_table(file, columns=["names", "payloads", "schema_ipc"]
+                        + cols)
 
     def chunk_keep(row):
         n_rows = row["n_rows"]
@@ -235,14 +250,14 @@ def _read_part_file(file: str, state: dict, zpred):
                      row["zone_min_dbl"][j], row["zone_max_dbl"][j],
                      row["zone_nulls"][j], n_rows)
                  for j, c in enumerate(row["zone_cols"] or [])}
-        if isinstance(zpred, dict):
-            return any(all(_part_keep_term(zones, n_rows, t)
-                           for t in ts) for ts in zpred["any"])
-        return all(_part_keep_term(zones, n_rows, t) for t in zpred)
+        blooms = dict(zip(row.get("bloom_cols") or [],
+                          row.get("blooms") or []))
+        return any(all(_part_keep_term(zones, n_rows, t)
+                       and (b is None or _bloom_keep(blooms.get(b[0]), b[1]))
+                       for t, b in ts) for ts in branches)
 
     if zpred is not None:
-        keep = [chunk_keep(r)
-                for r in tbl.select(["n_rows"] + zone).to_pylist()]
+        keep = [chunk_keep(r) for r in tbl.select(cols).to_pylist()]
         if not all(keep):
             tbl = tbl.filter(pa.array(keep, pa.bool_()))
     yield from decode_chunk_rows(tbl.to_batches(), out,

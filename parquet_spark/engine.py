@@ -973,14 +973,28 @@ def _zone_keep_term(term: tuple):
     # information = fits); the chunk survives iff SOME value fits all
     vcond = F.exists(varr, lambda v: _fits_all(v, pairs, safe_idx))
     keep = (idx.isNull() | (idx == 0)) | vcond
-    if not numeric:
+    b = _bloom_term(term)
+    if b is not None:
         # Bloom filters prune equality/IN on columns where zone ranges
         # can't (hash-placed high-cardinality strings): the chunk
         # survives the bloom test iff SOME value has all k bits set.
         # Chunks without a bloom for this column (legacy files, column
         # not indexed) keep unconditionally.
-        keep = keep & _bloom_keep_cond(col, vals)
+        keep = keep & _bloom_keep_cond(*b)
     return keep
+
+
+def _bloom_term(term: tuple) -> tuple[str, list] | None:
+    """(col, values) of a string/binary =/IN term — the only terms a
+    chunk's Bloom filter prunes (_build_bloom indexes string and binary
+    columns only); None for any other term.  The one rule both chunk
+    tests apply: _zone_keep_term (Spark) and the DataSource V2 reader
+    (_bloom_keep).  Never raises on a term _norm_term accepts (a bool
+    or NaN equality just has no Bloom term)."""
+    t = _norm_term(term)
+    if t[0] == "in" and all(isinstance(v, (str, bytes)) for v in t[2]):
+        return t[1], t[2]
+    return None
 
 
 def _bloom_keep_cond(col: str, vals: list):
@@ -1009,6 +1023,20 @@ def _bloom_keep_cond(col: str, vals: list):
                 F.getbit(word, pos.bitwiseAND(F.lit(63))) == 1)
         any_v = any_v | all_bits
     return bidx.isNull() | (bidx == 0) | words.isNull() | any_v
+
+
+def _bloom_keep(words: list[int] | None, vals: list) -> bool:
+    """_bloom_keep_cond for one chunk in pure Python (the DataSource V2
+    reader): no filter for the column keeps; otherwise some value must
+    have all k bits set in its `words`."""
+    if not words:
+        return True
+    m = 64 * len(words)
+    return any(
+        all(words[p >> 6] >> (p & 63) & 1
+            for p in _bloom_bit_positions(
+                v.encode("utf-8") if isinstance(v, str) else v, m))
+        for v in vals)
 
 
 def _fits_all(v, pairs, idx):

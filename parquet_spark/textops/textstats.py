@@ -183,8 +183,9 @@ def top_vocabulary(df: DataFrame, text_col: str = "text",
     staple).  explode -> hash-groupBy count (map-side partial combine,
     one shuffle of (word, count) pairs) -> rank with a deterministic
     (count desc, word asc) tie-break so the cut is reproducible.  The
-    final top-k is a WindowGroupLimit over a single ordering — at any
-    corpus size only distinct-word rows shuffle, never documents."""
+    rank window has no partition, so Spark plans the final top-k as
+    ``TakeOrderedAndProject(limit=k)`` — at any corpus size only
+    distinct-word rows shuffle, never documents."""
     from pyspark.sql import Window
     t = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
     words = (df.select(F.explode(F.split(t, " ")).alias("word"))
@@ -263,6 +264,9 @@ def train_bigram_lm(df: DataFrame, text_col: str = "text",
         out-of-vocab token can never mint a bigram key, so the key
         space is bounded by vocab²), then top ``bigram_cap`` under
         (count desc, w1 asc, w2 asc).
+
+    Both cuts rank over an unpartitioned window, which Spark plans as
+    ``TakeOrderedAndProject(limit=k)``.
 
     At 10^12 docs the shuffled keys are distinct words/pairs (Zipf:
     millions, not trillions) and the driver holds vocab_size +

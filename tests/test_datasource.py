@@ -151,7 +151,8 @@ def test_matches_read_decoded(spark, docs, table, tmp_path):
     a match-all scan_table, DataSource V2 batch and the first DataSource
     V2 streaming micro-batch return identical rows — also on an evolved
     table (renamed, widened and added columns, a global-dict column
-    holding nulls)."""
+    holding nulls).  On a Bloom-indexed table DSv2 keeps the same
+    chunks as scan_table."""
     from parquet_spark.manifest import alter_table, scan_table
     via_ds = spark.read.format("parquet_spark").load(table)
     via_api = read_decoded(spark, table)
@@ -189,6 +190,62 @@ def test_matches_read_decoded(spark, docs, table, tmp_path):
     assert surfaces["dsv2"].where(
         F.col("language").isNull()).count() == \
         base.where(F.col("lang").isNull()).count() > 0
+
+    # a url-hash table with url Bloom filters and many chunks per part:
+    # for a present and an absent url, the DSv2 reader decodes exactly
+    # the chunks scan_table's prune_chunks_pred keeps (zone AND Bloom)
+    # and returns scan_table's rows
+    from parquet_spark.corpus import gen_corpus
+    from parquet_spark.engine import decode_chunk, prune_chunks_pred
+    from parquet_spark.manifest import read_encoded
+    path = str(tmp_path / "bloom")
+    corpus = gen_corpus(spark, 2000, seed=7, parts=2).select("url", "lang")
+    write_encoded(corpus, path, key=["url"], n_parts=2, rows_per_chunk=100,
+                  bloom_cols=["url"])
+    enc = read_encoded(spark, path)
+    present = sorted(r.url for r in corpus.select("url").collect())[1000]
+    absent = present + "0"
+    # zones alone keep a chunk for the absent url: only its Bloom prunes
+    assert prune_chunks_pred(enc, [("url", absent, absent)]).count() >= 1
+    # urls are unique: a present url is one row in one kept chunk
+    for key, n in ((present, 1), (absent, 0)):
+        pred = [("url", "=", key)]
+        want = sorted(
+            tuple(decode_chunk(r.schema_ipc, r.names, r.payloads, ["url"])
+                  .column(0).to_pylist())
+            for r in prune_chunks_pred(enc, pred).collect())
+        reader = _EncodedTableReader(
+            _load_table_state({"path": path, "columns": "url"}))
+        reader._pred = pred
+        got = sorted(tuple(b.column(0).to_pylist())
+                     for p in reader.partitions() for b in reader.read(p))
+        assert got == want and len(got) == n, key
+        dsv2 = (spark.read.format("parquet_spark").load(path)
+                .where(F.col("url") == key))
+        exact = scan_table(spark, path, pred)
+        assert exact.count() == n, key
+        assert _sym_diff(dsv2, exact) == 0, key
+
+    # Spark pushes EqualTo(flag, true) for where(flag) and
+    # EqualTo(x, NaN) for x = NaN: neither has a Bloom term, and both
+    # read back exactly the matching source rows
+    path = str(tmp_path / "flags")
+    src = pa.table({"id": list(range(40)),
+                    "flag": [i % 3 == 0 for i in range(40)],
+                    "x": [float("nan") if i % 5 == 0 else i / 2
+                          for i in range(40)]})
+    write_encoded(spark.createDataFrame(src.to_pylist(),
+                                        "id long, flag boolean, x double"),
+                  path, key=["id"], n_parts=2, rows_per_chunk=10)
+    ds = spark.read.format("parquet_spark").load(path)
+    rows = src.to_pylist()
+    for cond, keep in ((F.col("flag"), lambda r: r["flag"]),
+                       (F.col("flag") == True,  # noqa: E712
+                        lambda r: r["flag"]),
+                       (F.col("x") == float("nan"),
+                        lambda r: r["x"] != r["x"])):
+        got = sorted(r.id for r in ds.where(cond).collect())
+        assert got == [r["id"] for r in rows if keep(r)], str(cond)
 
 
 def test_writer_create_and_read_back(spark, docs):
