@@ -31,23 +31,22 @@ Execution shape (scale notes):
   "unsupported", so Spark re-applies the exact predicate on the decoded
   rows — pruning only has to be conservative, never exact, and
   semantics like null-handling and collation stay Spark's.
-* ``read(partition)`` — executor-side: pyarrow reads ONLY the needed
-  top-level columns of the chunk container (names/payloads/n_rows +
-  zone arrays, plus the Bloom filters when a string =/IN filter was
-  pushed), each chunk row is tested in pure python with the chunk
-  semantics of scan_table's prune_chunks_pred (the per-part summary
-  test _part_keep_term applied at chunk granularity, and
-  engine._bloom_keep for string =/IN terms), and surviving chunks
-  decode through the engine's one chunk-decode kernel
-  (``engine.decode_chunk_rows``), the same function decode_table's
-  mapInArrow runs — one implementation, not a mirror.  That kernel
-  does all of: column projection (unselected payloads are never
-  decompressed), schema evolution (renames/drops through the
-  physical->logical map, widened columns decoded at their chunk width
-  then upcast, metadata-only added columns as nulls), global-dict
-  restore (one ``pa.compute.take`` over the snapshot's dictionary,
-  null ids stay null), and the conform to the Arrow types Spark
-  expects.
+* ``read(partition)`` — executor-side: the engine's part reader
+  (``engine.read_part_file``), the same kernel every snapshot read of
+  the Python API runs (read_decoded, scan_table, read_increment) — one
+  implementation, not a mirror.  pyarrow reads ONLY the needed
+  top-level columns of the chunk container: a metadata-only read of
+  the zone arrays (plus the Bloom filters when a string =/IN filter
+  was pushed) tests each chunk row (engine._part_keep_term at chunk
+  granularity, engine._bloom_keep for string =/IN terms), then the
+  surviving chunks stream one row at a time through the chunk-decode
+  kernel (``engine.decode_chunk_rows``).  That kernel does all of:
+  column projection (unselected payloads are never decompressed),
+  schema evolution (renames/drops through the physical->logical map,
+  widened columns decoded at their chunk width then upcast,
+  metadata-only added columns as nulls), global-dict restore (one
+  ``pa.compute.take`` over the snapshot's dictionary, null ids stay
+  null), and the conform to the Arrow types Spark expects.
 
 Not supported here (use read_decoded, which routes through Spark-side
 joins): tables with pending equality deletes — the reader raises
@@ -215,53 +214,14 @@ class _EncodedTableReader(DataSourceReader):
 
 
 def _read_part_file(file: str, state: dict, zpred):
-    """Executor-side decode of ONE part file to Arrow RecordBatches —
-    shared by the batch reader and the streaming source.  Chunk-level
-    pruning (zpred not None) happens before any decompression, with
-    engine._zone_keep_term's semantics: the zone test, plus the chunk's
-    Bloom filter for string/binary =/IN terms (engine._bloom_term);
-    surviving chunks go through the engine's decode kernel
-    (engine.decode_chunk_rows: evolution, global-dict restore and the
-    conform to Spark's Arrow types, exactly as decode_table)."""
-    import pyarrow.parquet as pq
-
+    """Decode ONE part file through the engine's part reader
+    (engine.read_part_file) — shared by the batch reader and the
+    streaming source."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from .engine import _bloom_keep, _bloom_term, decode_chunk_rows
-    from .manifest import _part_keep_term
-
-    out = to_arrow_schema(_spark_schema(state))
-    cols = ["n_rows"]
-    if zpred is not None:
-        cols += ["zone_cols", "zone_min_str", "zone_max_str",
-                 "zone_min_num", "zone_max_num", "zone_min_dbl",
-                 "zone_max_dbl", "zone_nulls"]
-        branches = [[(t, _bloom_term(t)) for t in ts] for ts in
-                    (zpred["any"] if isinstance(zpred, dict) else [zpred])]
-        if any(b for ts in branches for _, b in ts):
-            cols += ["bloom_cols", "blooms"]
-    tbl = pq.read_table(file, columns=["names", "payloads", "schema_ipc"]
-                        + cols)
-
-    def chunk_keep(row):
-        n_rows = row["n_rows"]
-        zones = {c: (row["zone_min_str"][j], row["zone_max_str"][j],
-                     row["zone_min_num"][j], row["zone_max_num"][j],
-                     row["zone_min_dbl"][j], row["zone_max_dbl"][j],
-                     row["zone_nulls"][j], n_rows)
-                 for j, c in enumerate(row["zone_cols"] or [])}
-        blooms = dict(zip(row.get("bloom_cols") or [],
-                          row.get("blooms") or []))
-        return any(all(_part_keep_term(zones, n_rows, t)
-                       and (b is None or _bloom_keep(blooms.get(b[0]), b[1]))
-                       for t, b in ts) for ts in branches)
-
-    if zpred is not None:
-        keep = [chunk_keep(r) for r in tbl.select(cols).to_pylist()]
-        if not all(keep):
-            tbl = tbl.filter(pa.array(keep, pa.bool_()))
-    yield from decode_chunk_rows(tbl.to_batches(), out,
-                                 state["renames"], state["gdicts"])
+    from .engine import read_part_file
+    return read_part_file(file, to_arrow_schema(_spark_schema(state)),
+                          state["renames"], state["gdicts"], zpred)
 
 
 class _PartMessage(WriterCommitMessage):
@@ -706,9 +666,9 @@ class _EncodedTableStreamReader(DataSourceStreamReader):
     file, enforcing the same append-only contract as read_increment —
     a compaction/rewrite or a changed pending-delete set between the
     offsets raises rather than emitting a lying diff.  Executors
-    decode through the shared :func:`_read_part_file` kernel.  Option
-    ``starting`` = "earliest" (default: first batch replays the whole
-    table) | "latest" (only appends after query start)."""
+    decode through the shared part reader (``engine.read_part_file``).
+    Option ``starting`` = "earliest" (default: first batch replays the
+    whole table) | "latest" (only appends after query start)."""
 
     def __init__(self, options, state: dict):
         from .manifest import EncodedTable

@@ -2,6 +2,8 @@
 
 encode_table: DataFrame -> DataFrame of encoded column-chunk rows
 decode_table: encoded DataFrame -> original DataFrame (bit-identical)
+decode_files: committed part files -> the same, each file read and
+              decoded inside one Python task (read_part_file)
 
 Spark-first rendering of the reference's hot path (rows -> columnar
 row-group cache -> flush, /root/reference/Parquet.Core/Fragment.cs:129-311):
@@ -27,7 +29,7 @@ from typing import Iterator
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .codecs import decode_column, encode_column
 
@@ -411,6 +413,73 @@ def decode_chunk_rows(batches: Iterator[pa.RecordBatch], out: pa.Schema,
                 pids[i].as_py() if with_pid else None)
 
 
+# the per-chunk zone arrays, in the order of a part zone summary's
+# first seven slots (see part_zone_summary)
+_ZONE_ARRAYS = ("zone_min_str", "zone_max_str", "zone_min_num",
+                "zone_max_num", "zone_min_dbl", "zone_max_dbl",
+                "zone_nulls")
+
+
+def read_part_file(file: str, out: pa.Schema, renames: dict,
+                   gdicts: dict[str, list], zpred=None
+                   ) -> Iterator[pa.RecordBatch]:
+    """THE part reader: decode ONE part file to `out` batches inside the
+    Python worker — every snapshot read (decode_files, the DataSource
+    V2 batch reader and streaming source) runs it, so chunk rows never
+    cross the JVM.
+
+    With a zone predicate `zpred` (manifest._translate_pred's output),
+    a metadata-only read of the zone (and, for string =/IN terms,
+    Bloom) columns decides which chunks survive: every chunk is tested
+    with _part_keep_term at chunk granularity, plus _bloom_keep.  Only
+    columns the file has are requested — a part written before some
+    zone/Bloom column existed reads it as absent, which keeps.  The
+    payload columns then stream one chunk row at a time, single-
+    threaded, so worker memory is bounded by one chunk; surviving
+    chunks decode through decode_chunk_rows."""
+    import pyarrow.parquet as pq
+
+    with pq.ParquetFile(file, memory_map=True) as pf:
+        have = set(pf.schema_arrow.names)
+        keep = None
+        if zpred is not None:
+            branches = [[(t, _bloom_term(t)) for t in ts] for ts in
+                        (zpred["any"] if isinstance(zpred, dict)
+                         else [zpred])]
+            cols = ["zone_cols", *_ZONE_ARRAYS]
+            if any(b for ts in branches for _, b in ts):
+                cols += ["bloom_cols", "blooms"]
+            rows = pf.read(columns=["n_rows"] + [c for c in cols
+                                                 if c in have],
+                           use_threads=False).to_pylist()
+
+            def chunk_keep(row):
+                n_rows = row["n_rows"]
+                zc = row.get("zone_cols") or []
+                arrs = [row.get(a) or [None] * len(zc)
+                        for a in _ZONE_ARRAYS]
+                zones = {c: (*(a[j] for a in arrs), n_rows)
+                         for j, c in enumerate(zc)}
+                blooms = dict(zip(row.get("bloom_cols") or [],
+                                  row.get("blooms") or []))
+                return any(all(_part_keep_term(zones, n_rows, t)
+                               and (b is None
+                                    or _bloom_keep(blooms.get(b[0]), b[1]))
+                               for t, b in ts) for ts in branches)
+
+            keep = [chunk_keep(r) for r in rows]
+            if not any(keep):
+                return
+        cols = ["schema_ipc", "names", "payloads", "n_rows"]
+        if "_part_id" in out.names:
+            cols.append("part_id")
+        batches = pf.iter_batches(batch_size=1, columns=cols,
+                                  use_threads=False)
+        if keep is not None:
+            batches = (b for b, k in zip(batches, keep) if k)
+        yield from decode_chunk_rows(batches, out, renames, gdicts)
+
+
 def decoded_spark_schema(schema: pa.Schema, gdicts: dict):
     """The Spark schema a decode of `schema` produces: global-dict
     columns surface as their VALUE type (string), not the stored ids.
@@ -731,8 +800,46 @@ def decode_table(enc_df: DataFrame, schema: pa.Schema | None = None,
     columns come back as their string values, restored executor-side
     inside the same decode (null ids stay null).  Every chunk goes
     through _decode_chunk_to."""
+    spark_schema, out, gdicts = _decode_target(
+        schema or read_encoded_schema(enc_df), columns, with_part_id,
+        gdicts)
+    ren = dict(renames or {})
+    return enc_df.mapInArrow(
+        lambda batches: decode_chunk_rows(batches, out, ren, gdicts),
+        spark_schema)
+
+
+def decode_files(spark: SparkSession, files: list[str], schema: pa.Schema,
+                 columns: list[str] | None = None,
+                 with_part_id: bool = False,
+                 renames: dict | None = None,
+                 gdicts: dict | None = None,
+                 zpred: list[tuple] | dict | None = None) -> DataFrame:
+    """decode_table over committed part FILES (same arguments and
+    result): the plan is Range -> MapInArrow with one task per file —
+    the DataSource V2 reader's partition unit — and each task reads its
+    file in the Python worker through read_part_file, so no chunk row
+    or payload crosses the JVM.  `zpred` (manifest._translate_pred's
+    zone predicate) prunes chunks by zone maps and Bloom filters
+    before any payload is read."""
+    spark_schema, out, gdicts = _decode_target(schema, columns,
+                                               with_part_id, gdicts)
+    ren = dict(renames or {})
+
+    def read(batches):
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                yield from read_part_file(files[i], out, ren, gdicts, zpred)
+
+    return (spark.range(len(files), numPartitions=len(files))
+            .mapInArrow(read, spark_schema))
+
+
+def _decode_target(schema: pa.Schema, columns: list[str] | None,
+                   with_part_id: bool, gdicts: dict | None):
+    """(Spark schema, Arrow `out` schema, gdicts restricted to it) of a
+    decode of `schema` projected to `columns`."""
     from pyspark.sql.pandas.types import to_arrow_schema
-    schema = schema or read_encoded_schema(enc_df)
     if columns is not None:
         missing = [c for c in columns if schema.get_field_index(c) < 0]
         if missing:
@@ -742,11 +849,7 @@ def decode_table(enc_df: DataFrame, schema: pa.Schema | None = None,
         schema = schema.append(pa.field("_part_id", pa.int64()))
     gdicts = {c: v for c, v in (gdicts or {}).items() if c in schema.names}
     spark_schema = decoded_spark_schema(schema, gdicts)
-    out = to_arrow_schema(spark_schema)
-    ren = dict(renames or {})
-    return enc_df.mapInArrow(
-        lambda batches: decode_chunk_rows(batches, out, ren, gdicts),
-        spark_schema)
+    return spark_schema, to_arrow_schema(spark_schema), gdicts
 
 
 def _is_numeric_bound(v) -> bool:
@@ -1037,6 +1140,55 @@ def _bloom_keep(words: list[int] | None, vals: list) -> bool:
             for p in _bloom_bit_positions(
                 v.encode("utf-8") if isinstance(v, str) else v, m))
         for v in vals)
+
+
+def _part_keep_term(zones: dict, n_rows: int, term: tuple) -> bool:
+    """Keep test for ONE predicate term against a zone summary
+    {col: (min_str, max_str, min_num, max_num, min_dbl, max_dbl, nulls,
+    covered_rows)} of `n_rows` rows: THE chunk rule of every snapshot
+    read (read_part_file, per chunk row) and the file rule of
+    manifest._prune_parts (per part summary).  A null bound or null
+    count is no information and keeps; a column whose summary covers
+    fewer rows than the part holds (schema evolution, fat-text
+    auto-skip, all-NaN chunks) keeps unconditionally."""
+    t = _norm_term(term)
+    if t[0] in ("isnull", "notnull"):
+        z = zones.get(t[1])
+        if not z or z[7] != n_rows or z[6] is None:
+            return True
+        return z[6] > 0 if t[0] == "isnull" else z[6] < n_rows
+    col = t[1]
+    z = zones.get(col)
+    if not z or z[7] != n_rows:
+        return True
+    mn_s, mx_s, mn_n, mx_n, mn_d, mx_d = z[:6]
+
+    def fits(lo, hi, numeric):
+        fams = (((mn_n, mx_n), (mn_d, mx_d)) if numeric
+                else ((mn_s, mx_s),))
+        for mn, mx in fams:
+            if lo is not None and mx is not None and mx < lo:
+                return False
+            if hi is not None and mn is not None and mn > hi:
+                return False
+        return True
+
+    if t[0] == "range":
+        _, _, lo, hi = t
+        numeric = ((lo is not None and _is_numeric_bound(lo))
+                   or (hi is not None and _is_numeric_bound(hi)))
+        if numeric:
+            lo = _as_num_bound(lo) if lo is not None else None
+            hi = _as_num_bound(hi) if hi is not None else None
+        return fits(lo, hi, numeric)
+    if t[0] == "prefix":
+        # same [p, _prefix_upper(p)) box the chunk-level prune uses;
+        # the inclusive fits() over-keeps only the boundary value
+        return fits(t[2], _prefix_upper(t[2]), False)
+    vals = t[2]
+    numeric = _is_numeric_bound(vals[0])
+    nvals = [_as_num_bound(v) for v in vals] if numeric else vals
+    return any(fits(v, v, numeric) for v in nvals)
 
 
 def _fits_all(v, pairs, idx):

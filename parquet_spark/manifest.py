@@ -43,12 +43,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .engine import (DEFAULT_ROWS_PER_CHUNK, ENCODED_DDL,
                      write_part_atomic,
-                     _as_num_bound, _chunk_rows_to_batch,
-                     _is_numeric_bound, _norm_term, _prefix_upper,
+                     _chunk_rows_to_batch, _norm_term, _part_keep_term,
                      _residual_cond,
-                     decode_chunk, decode_table, encode_chunk,
-                     part_zone_summary, part_zone_summary_from_chunkrows,
-                     prune_chunks_pred, take_full_batches)
+                     decode_chunk, decode_files, decode_table,
+                     encode_chunk, part_zone_summary,
+                     part_zone_summary_from_chunkrows, take_full_batches)
 
 LINEAGE_DDL = ("part_id bigint, file string, n_chunks bigint, n_rows bigint, "
                "bytes_in bigint, bytes_out bigint, wall_ms double, "
@@ -2828,24 +2827,25 @@ def _decode_snapshot(spark: SparkSession, table: "EncodedTable",
     drive the decode; pending equality deletes are applied (the layout
     key decodes too when the projection excludes it, and is dropped
     again).  `files` narrows to some of the snapshot's part files
-    (default: all of them); `zpred` prunes chunks by zone maps."""
+    (default: all of them); `zpred` (_translate_pred's zone predicate)
+    prunes chunks.  The plan is engine.decode_files' Range ->
+    MapInArrow: one task per file reads, prunes and decodes it in the
+    Python worker (engine.read_part_file), so chunk rows and payloads
+    never pass through the JVM."""
     if files is None:
         files = table.data_files(snap)
         if not files:
             raise ValueError(f"no committed snapshot at {table.path}")
-    enc = spark.read.schema(ENCODED_DDL).parquet(*files)
-    if zpred is not None:
-        enc = prune_chunks_pred(enc, zpred)
     meta = table.meta(snap)
     has_deletes = bool(meta.get("delete_files"))
     key = ((_layout_of(snap) or {}).get("key") if has_deletes else None) \
         or []
     extra = [k for k in key if columns is not None and k not in columns]
-    dec = decode_table(enc, table.schema(snap),
+    dec = decode_files(spark, files, table.schema(snap),
                        columns=columns + extra if extra else columns,
                        with_part_id=has_deletes,
                        renames=meta.get("renames"),
-                       gdicts=meta.get("global_dicts"))
+                       gdicts=meta.get("global_dicts"), zpred=zpred)
     if has_deletes:
         dec = _apply_deletes(spark, dec, meta)
     return dec.drop(*extra) if extra else dec
@@ -2855,53 +2855,6 @@ def _decode_snapshot(spark: SparkSession, table: "EncodedTable",
 # IN-list for zone pruning; wider ranges skip pruning for that term
 # (conservative — the residual on restored values stays exact)
 _GDICT_PRUNE_MAX = 512
-
-
-def _part_keep_term(zones: dict, n_rows: int, term: tuple) -> bool:
-    """Driver-side keep test for ONE predicate term against a part's
-    zone summary — the exact mirror of engine._zone_keep_term's chunk
-    semantics (null family bound = no information = keep), with one
-    extra guard: a column whose summary covers fewer rows than the part
-    holds (schema evolution, fat-text auto-skip, all-NaN chunks) keeps
-    the file unconditionally."""
-    t = _norm_term(term)
-    if t[0] in ("isnull", "notnull"):
-        z = zones.get(t[1])
-        if not z or z[7] != n_rows:
-            return True
-        return z[6] > 0 if t[0] == "isnull" else z[6] < n_rows
-    col = t[1]
-    z = zones.get(col)
-    if not z or z[7] != n_rows:
-        return True
-    mn_s, mx_s, mn_n, mx_n, mn_d, mx_d = z[:6]
-
-    def fits(lo, hi, numeric):
-        fams = (((mn_n, mx_n), (mn_d, mx_d)) if numeric
-                else ((mn_s, mx_s),))
-        for mn, mx in fams:
-            if lo is not None and mx is not None and mx < lo:
-                return False
-            if hi is not None and mn is not None and mn > hi:
-                return False
-        return True
-
-    if t[0] == "range":
-        _, _, lo, hi = t
-        numeric = ((lo is not None and _is_numeric_bound(lo))
-                   or (hi is not None and _is_numeric_bound(hi)))
-        if numeric:
-            lo = _as_num_bound(lo) if lo is not None else None
-            hi = _as_num_bound(hi) if hi is not None else None
-        return fits(lo, hi, numeric)
-    if t[0] == "prefix":
-        # same [p, _prefix_upper(p)) box the chunk-level prune uses;
-        # the inclusive fits() over-keeps only the boundary value
-        return fits(t[2], _prefix_upper(t[2]), False)
-    vals = t[2]
-    numeric = _is_numeric_bound(vals[0])
-    nvals = [_as_num_bound(v) for v in vals] if numeric else vals
-    return any(fits(v, v, numeric) for v in nvals)
 
 
 def _prune_parts(parts: dict[str, dict],
@@ -3426,7 +3379,15 @@ def scan_table(spark: SparkSession, table_path: str,
     NOT an id range), and the exact residual filter runs on the
     RESTORED value columns.  Non-dict columns behave exactly as in
     scan_filtered.  `pred` shapes: AND-list of (col, lo, hi) /
-    (col, "=", v) / (col, "in", [v...]), or {"any": [and_list, ...]}."""
+    (col, "=", v) / (col, "in", [v...]), or {"any": [and_list, ...]}.
+
+    Every term is validated here, on the driver, before any task runs.
+    Part files prune from the manifest's per-part summaries
+    (_prune_parts, zero Spark jobs); chunks prune inside the Python
+    worker that decodes the file (engine.read_part_file: zone maps and
+    Bloom filters, from a metadata-only read), so the plan is
+    Range -> MapInArrow -> Filter and pruned chunks' payloads are never
+    read."""
     table = EncodedTable(table_path, backend=backend)
     snap = _resolve_snap(table, snapshot_id, ref)
     meta = table.meta(snap)

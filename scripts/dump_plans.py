@@ -185,9 +185,13 @@ def main():
     write_encoded(docs.select("doc_id", "lang"), gtbl, key=["doc_id"],
                   n_parts=2, global_dict_cols=["lang"])
     add("Global-dict restore on read (no join)",
-        "Columns stored as global-dict int ids are restored by a "
-        "LITERAL array lookup inside the projection — pure codegen, no "
-        "broadcast, no shuffle; the dictionary rides in the plan, not "
+        "The plan is Range -> MapInArrow: one task per part file, and "
+        "each task reads its file with pyarrow inside the Python worker "
+        "(engine.read_part_file), so no chunk row or payload passes "
+        "through the JVM. Columns stored as global-dict int ids are "
+        "restored inside that same decode (one pc.take per chunk over "
+        "the snapshot's dictionary, null ids stay null) — no join, no "
+        "broadcast, no shuffle; the dictionary rides in the task, not "
         "in the data.",
         read_decoded(spark, gtbl))
 
@@ -199,8 +203,17 @@ def main():
            ""]
     for title, note, plan in sections:
         out += [f"## {title}", "", note, "", "```", plan.rstrip(), "```", ""]
-    with open(os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "PLANS.md")
+    # hand-written sections (no plan to dump) stay, in their order,
+    # after the generated ones
+    generated = {title for title, _, _ in sections}
+    if os.path.exists(path):
+        with open(path) as f:
+            for block in f.read().split("\n## ")[1:]:
+                if block.split("\n", 1)[0] not in generated:
+                    out += ["## " + block.rstrip(), ""]
+    with open(path, "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
     spark.stop()

@@ -146,6 +146,27 @@ def test_deletes_refused(spark, docs):
         spark.read.format("parquet_spark").load(path).count()
 
 
+def _python_rows_out(df) -> int:
+    """Rows the Python nodes of `df`'s executed plan handed back to the
+    JVM (the pythonNumRowsReceived metric); call after an action."""
+    total = 0
+    todo = [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        metrics = node.metrics()
+        if metrics.contains("pythonNumRowsReceived"):
+            total += metrics.apply("pythonNumRowsReceived").value()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        else:
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    return total
+
+
 def test_matches_read_decoded(spark, docs, table, tmp_path):
     """Every read surface runs the one chunk-decode kernel: read_decoded,
     a match-all scan_table, DataSource V2 batch and the first DataSource
@@ -192,9 +213,10 @@ def test_matches_read_decoded(spark, docs, table, tmp_path):
         base.where(F.col("lang").isNull()).count() > 0
 
     # a url-hash table with url Bloom filters and many chunks per part:
-    # for a present and an absent url, the DSv2 reader decodes exactly
-    # the chunks scan_table's prune_chunks_pred keeps (zone AND Bloom)
-    # and returns scan_table's rows
+    # for a present and an absent url, the DSv2 reader and scan_table's
+    # MapInArrow (before the residual) both decode exactly the chunks
+    # the engine-level prune_chunks_pred keeps (zone AND Bloom), and
+    # DSv2 returns scan_table's rows
     from parquet_spark.corpus import gen_corpus
     from parquet_spark.engine import decode_chunk, prune_chunks_pred
     from parquet_spark.manifest import read_encoded
@@ -210,10 +232,11 @@ def test_matches_read_decoded(spark, docs, table, tmp_path):
     # urls are unique: a present url is one row in one kept chunk
     for key, n in ((present, 1), (absent, 0)):
         pred = [("url", "=", key)]
+        kept = prune_chunks_pred(enc, pred).collect()
         want = sorted(
             tuple(decode_chunk(r.schema_ipc, r.names, r.payloads, ["url"])
                   .column(0).to_pylist())
-            for r in prune_chunks_pred(enc, pred).collect())
+            for r in kept)
         reader = _EncodedTableReader(
             _load_table_state({"path": path, "columns": "url"}))
         reader._pred = pred
@@ -223,7 +246,8 @@ def test_matches_read_decoded(spark, docs, table, tmp_path):
         dsv2 = (spark.read.format("parquet_spark").load(path)
                 .where(F.col("url") == key))
         exact = scan_table(spark, path, pred)
-        assert exact.count() == n, key
+        assert len(exact.collect()) == n, key
+        assert _python_rows_out(exact) == sum(r.n_rows for r in kept), key
         assert _sym_diff(dsv2, exact) == 0, key
 
     # Spark pushes EqualTo(flag, true) for where(flag) and
@@ -246,6 +270,51 @@ def test_matches_read_decoded(spark, docs, table, tmp_path):
                         lambda r: r["x"] != r["x"])):
         got = sorted(r.id for r in ds.where(cond).collect())
         assert got == [r["id"] for r in rows if keep(r)], str(cond)
+
+
+def test_parts_without_newer_chunk_row_columns(spark, tmp_path):
+    """Part files written before the double zones, zone sums and Bloom
+    filters existed lack those chunk-row columns.  The part reader asks
+    only for the columns a file has and keeps a chunk whose zone or
+    Bloom array is absent, so read_decoded, scan_table and DSv2 filters
+    still return exactly the source rows."""
+    import pyarrow.parquet as pq
+
+    from parquet_spark.manifest import EncodedTable, scan_table
+    src = pa.table({"doc_id": list(range(200)),
+                    "url": [f"https://h{i % 9}.example/{i}"
+                            for i in range(200)],
+                    "x": [i / 4 for i in range(200)]})
+    path = str(tmp_path / "legacy")
+    write_encoded(spark.createDataFrame(src.to_pylist(),
+                                        "doc_id long, url string, x double"),
+                  path, key=["doc_id"], n_parts=2, rows_per_chunk=50,
+                  bloom_cols=["url"])
+    stripped = {"zone_min_dbl", "zone_max_dbl", "zone_sum_num",
+                "bloom_cols", "blooms"}
+    for f in EncodedTable(path).data_files():
+        tb = pq.read_table(f)
+        pq.write_table(tb.select([c for c in tb.schema.names
+                                  if c not in stripped]), f)
+    rows = src.to_pylist()
+
+    def got(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert got(read_decoded(spark, path)) == \
+        sorted(tuple(r.values()) for r in rows)
+    ds = spark.read.format("parquet_spark").load(path)
+    url = rows[77]["url"]
+    for pred, cond, keep in (
+            ([("doc_id", 10, 20)], F.col("doc_id").between(10, 20),
+             lambda r: 10 <= r["doc_id"] <= 20),
+            ([("x", 5.0, 7.5)], F.col("x").between(5.0, 7.5),
+             lambda r: 5.0 <= r["x"] <= 7.5),
+            ([("url", "=", url)], F.col("url") == url,
+             lambda r: r["url"] == url)):
+        want = sorted(tuple(r.values()) for r in rows if keep(r))
+        assert want and got(scan_table(spark, path, pred)) == want, pred
+        assert got(ds.where(cond)) == want, pred
 
 
 def test_writer_create_and_read_back(spark, docs):
