@@ -317,7 +317,7 @@ def _dec_bool(body: bytes, t: pa.DataType) -> pa.Array:
     return _scatter(pa.array(bits, type=pa.bool_()), n, valid)
 
 
-def _strings_from(data: bytes, lengths: np.ndarray, t: pa.DataType) -> pa.Array:
+def _strings_from(data, lengths: np.ndarray, t: pa.DataType) -> pa.Array:
     offs = np.zeros(len(lengths) + 1, dtype=np.int64)
     np.cumsum(lengths, out=offs[1:])
     arr = pa.Array.from_buffers(
@@ -418,7 +418,7 @@ def _dec_fsst(body: bytes, t: pa.DataType) -> pa.Array:
     _, n, valid, off = _read_header(body)
     lens_b, off = _read_u32_block(body, off)
     lengths = decode_uint64(lens_b).view(np.int64)
-    data = fsst.decode(body[off:])
+    data = fsst.decode(memoryview(body)[off:])
     return _scatter(_strings_from(data, lengths, t), n, valid)
 
 

@@ -36,6 +36,14 @@ Buffers are processed in L2-sized tiles, each tile running ALL merge
 rounds while cache-resident: DRAM traffic is ~one read + one write of
 the stream instead of one per round.
 
+Decode is a dictionary decode of the code stream: the symbol
+expansions (byte literals plus the rule-built symbols) form a binary
+dictionary, and one Arrow `take` of it by the codes lays the expansions
+end to end — the data buffer of the taken array is the decoded stream,
+returned as a pa.Buffer without a copy.  The codes are a zero-copy uint8
+array over the payload (u8/u8e) or a uint16 array of the low plane plus
+the high-bit plane (u16); u8e then un-escapes the taken buffer.
+
 Payload layout (self-describing):
     <B mode>
     mode 1: <B n_rules> <Q n_codes> n_rules x (<B code><B left><B right>)
@@ -497,35 +505,27 @@ def encode(buf: bytes, table, hist: np.ndarray | None = None) -> bytes:
     return head + rules_b + low + high
 
 
-def _gather_decode(a: np.ndarray, exp: list[bytes]) -> bytes:
-    """Expand a code stream through the symbol table (tiled gather).
-
-    (A fixed-width (n, L)-matrix gather + boolean-mask compress was
-    prototyped for the shallow default tables and measured SLOWER than
-    this repeat/cumsum path — 2D advanced indexing costs more than the
-    output-sized repeat temporaries — so the generic path stays.)"""
-    lengths32 = np.array([len(e) for e in exp], dtype=np.int32)
-    starts = np.zeros(len(exp) + 1, dtype=np.int32)
-    np.cumsum(lengths32, out=starts[1:])
-    flat = np.frombuffer(b"".join(exp), dtype=np.uint8)
-    parts = []
-    for lo in range(0, len(a), _TILE):
-        t = a[lo:lo + _TILE]
-        out_lens = lengths32[t]
-        total = int(out_lens.sum(dtype=np.int64))
-        dt = np.int32 if total < 2**31 - 1 else np.int64
-        out_lens = out_lens.astype(dt, copy=False)
-        out_starts = np.zeros(len(t), dtype=dt)
-        np.cumsum(out_lens[:-1], out=out_starts[1:])
-        pos = np.arange(total, dtype=dt)
-        pos -= np.repeat(out_starts, out_lens)
-        idx = np.repeat(starts[t].astype(dt, copy=False), out_lens)
-        idx += pos
-        parts.append(flat[idx])
-    return b"".join(memoryview(p) for p in parts)
+# the take's offsets are int32 when every code could expand to the
+# longest symbol and still end below 2**31 (binary), else int64
+_OFFSET_LIMIT = 2 ** 31
 
 
-def decode(payload: bytes) -> bytes:
+def _expand(codes: pa.Array, exp: list[bytes]) -> pa.Buffer:
+    """Dictionary decode of a code stream: take each code's expansion.
+    The data buffer of the taken binary array IS the decoded stream."""
+    if not len(codes):
+        return pa.py_buffer(b"")
+    wide = len(codes) * max(map(len, exp)) >= _OFFSET_LIMIT
+    out = pc.take(pa.array(exp, pa.large_binary() if wide
+                           else pa.binary()), codes)
+    ends = np.frombuffer(out.buffers()[1],
+                         np.int64 if wide else np.int32)
+    return out.buffers()[2].slice(0, int(ends[len(out)]))
+
+
+def decode(payload) -> pa.Buffer:
+    """Decode a payload (any bytes-like) to the original byte stream,
+    returned as a pa.Buffer (it compares equal to the bytes)."""
     mode = payload[0]
     if mode in (1, 2):
         esc = codes = None
@@ -542,30 +542,24 @@ def decode(payload: bytes) -> bytes:
             c, l, r = struct.unpack_from("<BBB", payload, off + 3 * i)
             exp[c] = exp[l] + exp[r]
         off += 3 * n_rules
-        if n_codes == 0:
-            return b""
-        a = np.frombuffer(payload, np.uint8, n_codes, off).astype(np.int32)
-        out = _gather_decode(a, exp)
+        out = _expand(pa.array(np.frombuffer(payload, np.uint8, n_codes,
+                                             off)), exp)
         if esc is not None:
-            arr = _unescape_bytes(np.frombuffer(out, dtype=np.uint8),
-                                  esc, codes)
-            out = arr.tobytes()
+            out = pa.py_buffer(_unescape_bytes(
+                np.frombuffer(out, dtype=np.uint8), esc, codes))
         return out
 
     n_rules, n_codes = struct.unpack_from("<HQ", payload, 1)
     off = 11
-    rules = [struct.unpack_from("<HH", payload, off + 4 * i)
-             for i in range(n_rules)]
+    exp = [bytes([i]) for i in range(256)]
+    for i in range(n_rules):
+        left, right = struct.unpack_from("<HH", payload, off + 4 * i)
+        exp.append(exp[left] + exp[right])
     off += 4 * n_rules
-    if n_codes == 0:
-        return b""
-    a = np.frombuffer(payload, np.uint8, n_codes, off).astype(np.int32)
+    a = np.frombuffer(payload, np.uint8, n_codes, off).astype(np.uint16)
     if n_rules:
         high = np.unpackbits(
             np.frombuffer(payload, np.uint8, (n_codes + 7) // 8,
                           off + n_codes), count=n_codes)
-        a += high.astype(np.int32) << 8
-    exp = [bytes([i]) for i in range(256)]
-    for left, right in rules:
-        exp.append(exp[left] + exp[right])
-    return _gather_decode(a, exp)
+        a |= high.astype(np.uint16) << 8
+    return _expand(pa.array(a), exp)

@@ -112,6 +112,152 @@ def test_fsst_random_bytes_roundtrip():
     assert fsst.decode(enc) == buf
 
 
+# Payloads written by the encoder before decode became an Arrow take,
+# one per wire shape: every decoder must read what is already on disk.
+#   u8             trained on the buffer itself
+#   u8_zero_rules  a u8 table whose codes occur in the buffer: no rules
+#   u8e            escape mode; bytes(range(256)) escapes the escape
+#                  byte itself and 96 requisitioned values in a row
+#   u16            codes >= 256 in the high-bit plane, a nested rule
+#   *_empty        n_codes == 0 (u16 without rules; u8 with its rules)
+FSST_GOLDEN = {
+    "u8": (b"http://ex.org/a/b?q=1&r=2 " * 20,
+        "0127820000000000000000782e01747402747003726704723d05713d06703a07"
+        "6f7208687409672f0a65780b623f0c612f0d3f710e3d320f3d31103a2f113220"
+        "123126132f65142f62152f61162f2f172e6f1826721920681a13001b12041c10"
+        "131d0c0b1e0b051f051221090c22080223070924021025041127000728110822"
+        "1c27211e1b28241a231d1f25221c27211e1b28241a231d1f25221c27211e1b28"
+        "241a231d1f25221c27211e1b28241a231d1f25221c27211e1b28241a231d1f25"
+        "221c27211e1b28241a231d1f25221c27211e1b28241a231d1f25221c27211e1b"
+        "28241a231d1f25221c27211e1b28241a231d1f25221c27211e1b28241a231d1f"
+        "25"),
+    "u8_zero_rules": (b"abc \x00\x01 abc",
+        "01000a0000000000000061626320000120616263"),
+    "u8e": (b"a" * 2900 + bytes(range(256)) + b"a" * 64,
+        "0200600102030405060708090a0b0c0d0e0f101112131415161718191a1b1c1d"
+        "1e1f202122232425262728292a2b2c2d2e2f303132333435363738393a3b3c3d"
+        "3e3f404142434445464748494a4b4c4d4e4f505152535455565758595a5b5c5d"
+        "5e5f6003d7020000000000000161610201010302020303030303030303030303"
+        "0303030303030303030303030303030303030303030303030303030303030303"
+        "0303030303030303030303030303030303030303030303030303030303030303"
+        "0303030303030303030303030303030303030303030303030303030303030303"
+        "0303030303030303030303030303030303030303030303030303030303030303"
+        "0303030303030303030303030303030303030303030303030303030303030303"
+        "0303030303030303030303030303030303030303030303030303030303030303"
+        "0303030303030303030303030303030303030303030303030303030303030303"
+        "0303030303030303030303030303030303030303030303030303030303030303"
+        "0303030303030303030303030303030303030303030303030303030303030303"
+        "0303030303030303030303030303030303030303030303030303030303030303"
+        "0303030303030303030303030303030303030303030303030303030303030302"
+        "006100620063006400650066006700680069006a006b006c006d006e006f0070"
+        "007100720073007400750076007700780079007a007b007c007d007e007f0080"
+        "008100820083008400850086008700880089008a008b008c008d008e008f0090"
+        "009100920093009400950096009700980099009a009b009c009d009e009f00a0"
+        "00a100a200a300a400a500a600a700a800a900aa00ab00ac00ad00ae00af00b0"
+        "00b100b200b300b400b500b600b700b800b900ba00bb00bc00bd00be00bf00c0"
+        "00c16162636465666768696a6b6c6d6e6f707172737475767778797a7b7c7d7e"
+        "7f808182838485868788898a8b8c8d8e8f909192939495969798999a9b9c9d9e"
+        "9fa0a1a2a3a4a5a6a7a8a9aaabacadaeafb0b1b2b3b4b5b6b7b8b9babbbcbdbe"
+        "bfc0c1c2c3c4c5c6c7c8c9cacbcccdcecfd0d1d2d3d4d5d6d7d8d9dadbdcddde"
+        "dfe0e1e2e3e4e5e6e7e8e9eaebecedeeeff0f1f2f3f4f5f6f7f8f9fafbfcfdfe"
+        "ff6102030303030303030161"),
+    "u16": (bytes(range(256)) + b"xy" * 20,
+        "0003000a01000000000000780079007900780000010001000102030405060708"
+        "090a0b0c0d0e0f101112131415161718191a1b1c1d1e1f202122232425262728"
+        "292a2b2c2d2e2f303132333435363738393a3b3c3d3e3f404142434445464748"
+        "494a4b4c4d4e4f505152535455565758595a5b5c5d5e5f606162636465666768"
+        "696a6b6c6d6e6f7071727374757677007a7b7c7d7e7f80818283848586878889"
+        "8a8b8c8d8e8f909192939495969798999a9b9c9d9e9fa0a1a2a3a4a5a6a7a8a9"
+        "aaabacadaeafb0b1b2b3b4b5b6b7b8b9babbbcbdbebfc0c1c2c3c4c5c6c7c8c9"
+        "cacbcccdcecfd0d1d2d3d4d5d6d7d8d9dadbdcdddedfe0e1e2e3e4e5e6e7e8e9"
+        "eaebecedeeeff0f1f2f3f4f5f6f7f8f9fafbfcfdfeff00020202020202020202"
+        "0000000000000000000000000000000080000000000000000000000000000000"
+        "01ffc0"),
+    "u16_empty": (b"",
+        "0000000000000000000000"),
+    "u8_empty": (b"",
+        "0127000000000000000000782e01747402747003726704723d05713d06703a07"
+        "6f7208687409672f0a65780b623f0c612f0d3f710e3d320f3d31103a2f113220"
+        "123126132f65142f62152f61162f2f172e6f1826721920681a13001b12041c10"
+        "131d0c0b1e0b051f051221090c220802230709240210250411270007281108"),
+}
+
+
+@pytest.fixture(params=["int32", "int64"])
+def fsst_offsets(request, monkeypatch):
+    """Decode with int32 take offsets, or force the int64 branch that
+    only streams near 2 GiB reach (raising=False: decoders without the
+    limit ignore it)."""
+    if request.param == "int64":
+        monkeypatch.setattr(fsst, "_OFFSET_LIMIT", 1, raising=False)
+
+
+@pytest.mark.parametrize("shape", sorted(FSST_GOLDEN))
+def test_fsst_golden_payloads(shape, fsst_offsets):
+    raw, hexpayload = FSST_GOLDEN[shape]
+    payload = bytes.fromhex(hexpayload)
+    assert payload[0] == {"u8": 1, "u8e": 2, "u16": 0}[shape.split("_")[0]]
+    assert fsst.decode(payload) == raw
+    assert fsst.decode(memoryview(payload)) == raw
+
+
+def _fsst_mode(payload: bytes) -> int:
+    """Wire mode byte of the FSST payload inside a STR_FSST column."""
+    from parquet_spark.codecs import column
+    body = column._block_unwrap(payload)
+    assert body[0] == column.STR_FSST
+    _, _, _, off = column._read_header(body)
+    _, off = column._read_u32_block(body, off)
+    return body[off]
+
+
+def _fsst_string_columns() -> dict[int, list]:
+    """Python values per FSST wire mode, each with nulls and empty
+    strings.  `chars` is valid UTF-8 touching 242 byte values (a
+    UTF-8 stream can hold 243), so too few values stay free for the
+    u8 mode: rare among prose it is escaped (u8e); repeated, the escape
+    overhead is too high and the payload is u16."""
+    chars = ("".join(map(chr, range(0x80)))
+             + "".join(map(chr, range(0x80, 0x800, 13)))
+             + "".join(chr(0x1000 * k + 0x123) for k in range(16))
+             + "".join(chr(0x40000 * k or 0x10000) for k in range(5)))
+    prose = [("the quick brown fox jumps over the lazy dog %d" % i)
+             for i in range(300)]
+    return {
+        1: prose[:100] + ["", None, "", "tail"],
+        2: prose + [None, chars, "", None],
+        0: [chars] * 20 + ["", None, "ab" * 40, None],
+    }
+
+
+@pytest.mark.parametrize("typ", [pa.string(), pa.binary()])
+@pytest.mark.parametrize("mode", [1, 2, 0])
+def test_fsst_column_assembly(typ, mode, fsst_offsets):
+    vals = _fsst_string_columns()[mode]
+    if pa.types.is_binary(typ):
+        vals = [None if v is None else v.encode() for v in vals]
+    arr = pa.array(vals, type=typ)
+    name, payload = encode_column(arr, codec="fsst")
+    assert name == "fsst" and _fsst_mode(payload) == mode
+    out = decode_column(payload, typ)
+    assert out.type == typ and out.equals(arr)
+
+
+@pytest.mark.parametrize("typ", [pa.string(), pa.binary()])
+def test_fsst_column_assembly_all_empty(typ):
+    """An all-empty chunk after a trained one reuses the cached table:
+    n_codes == 0, so the take has no data buffer."""
+    first = pa.array(["www.example.com/page/%d" % i for i in range(200)],
+                     type=pa.string()).cast(typ)
+    empty = pa.array(["", None, "", ""], type=pa.string()).cast(typ)
+    ctx = {}
+    encode_column(first, codec="fsst", ctx=ctx)
+    name, payload = encode_column(empty, codec="fsst", ctx=ctx)
+    assert name == "fsst" and _fsst_mode(payload) == 1
+    out = decode_column(payload, typ)
+    assert out.type == typ and out.equals(empty)
+
+
 # ------------------------------------------------------- column encoder
 
 def col_roundtrip(arr: pa.Array, expect_codec=None, force=None):
