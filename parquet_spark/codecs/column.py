@@ -597,20 +597,19 @@ def _adjacent_lcp(data: bytes, offs: np.ndarray) -> np.ndarray:
     return lcp
 
 
-def _gather_ranges(buf: np.ndarray, starts: np.ndarray,
-                   lens: np.ndarray) -> bytes:
-    """Concatenate buf[starts[i] : starts[i]+lens[i]] without a Python
-    loop (cumsum index trick)."""
+def _range_index(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """The positions starts[i] .. starts[i]+lens[i]-1 of every range, in
+    order, without a Python loop (cumsum index trick)."""
     total = int(lens.sum())
     if total == 0:
-        return b""
+        return np.zeros(0, np.int64)
     nz = lens > 0
     s, l = starts[nz], lens[nz]
     out = np.ones(total, np.int64)
     pos = np.concatenate(([0], np.cumsum(l)[:-1]))
     out[pos] = np.concatenate(([s[0]], s[1:] - (s[:-1] + l[:-1] - 1)))
     np.cumsum(out, out=out)
-    return buf[out].tobytes()
+    return out
 
 
 def _enc_prefix(arr: pa.Array) -> bytes:
@@ -620,8 +619,8 @@ def _enc_prefix(arr: pa.Array) -> bytes:
     np.cumsum(lengths, out=offs[1:])
     lcp = _adjacent_lcp(data, offs)
     suf_lens = lengths - lcp
-    suffixes = _gather_ranges(np.frombuffer(data, np.uint8),
-                              offs[:-1] + lcp, suf_lens)
+    suffixes = np.frombuffer(data, np.uint8)[
+        _range_index(offs[:-1] + lcp, suf_lens)].tobytes()
     return b"".join((head,
                      _prefix_u32(encode_uint64(lcp.view(np.uint64))),
                      _prefix_u32(encode_uint64(suf_lens.view(np.uint64))),
@@ -638,22 +637,19 @@ def _dec_prefix(body: bytes, t: pa.DataType) -> pa.Array:
     starts = np.zeros(len(lengths) + 1, np.int64)
     np.cumsum(lengths, out=starts[1:])
     outbuf = np.empty(int(starts[-1]), np.uint8)
-    src = np.frombuffer(body, np.uint8, offset=off)
-    # inherently sequential (each value borrows its predecessor's bytes);
-    # the loop body is two memcpy slices, ~O(bytes) total
-    so = 0
-    prev = 0
-    for i in range(len(lengths)):
-        p = lcp[i]
-        s = suf_lens[i]
-        st = starts[i]
-        if p:
-            outbuf[st:st + p] = outbuf[prev:prev + p]
-        if s:
-            outbuf[st + p:st + p + s] = src[so:so + s]
-            so += s
-        prev = st
-    return _scatter(_strings_from(outbuf.tobytes(), lengths, t), n, valid)
+    # the suffixes are stored in row order: scatter them all at once
+    suf = _range_index(starts[:-1] + lcp, suf_lens)
+    outbuf[suf] = np.frombuffer(body, np.uint8, len(suf), off)
+    # then the borrowed bytes, one byte position j at a time (j < the
+    # cap): byte j of row i (j < lcp[i]) is byte j of the last row
+    # r <= i with lcp[r] <= j, which is a suffix byte of r
+    rows = np.arange(len(lcp))
+    for j in range(int(lcp.max(initial=0))):
+        borrow = lcp > j
+        last = np.maximum.accumulate(np.where(borrow, 0, rows))
+        dst = np.flatnonzero(borrow)
+        outbuf[starts[dst] + j] = outbuf[starts[last[dst]] + j]
+    return _scatter(_strings_from(outbuf, lengths, t), n, valid)
 
 
 # ALP-style decimal-float encoding (codec id 10).  Published scheme:

@@ -29,9 +29,15 @@ Three wire modes, chosen per buffer:
     emitted as a low-byte plane plus a bit-packed high-bit plane.
     Handles buffers where even escape overhead would be too high.
 
-Matching is a single gather through a lookup table; selection is a
-maximal non-overlapping match set computed with pure boolean passes
-(two-coloring of the conflict path graph — no index-array temporaries).
+Each merge pass is one 1-D `take` through a pair lookup table and one
+`compress`.  In the u8 modes the pair keys are the stream itself read
+as unaligned little-endian uint16 (a strided view: no key array is
+built).  The table maps a pair to its rule's code, or to the pair's
+left symbol where no rule applies, so `take ^ left` is nonzero exactly
+at the matches.  Selection is a maximal non-overlapping match set
+computed with pure boolean passes (two-coloring of the conflict path
+graph — no index-array temporaries); the chosen codes are blended in
+with integer arithmetic and the stream is compacted by the compress.
 Buffers are processed in L2-sized tiles, each tile running ALL merge
 rounds while cache-resident: DRAM traffic is ~one read + one write of
 the stream instead of one per round.
@@ -127,48 +133,61 @@ def _choose_matches(m: np.ndarray) -> np.ndarray:
     positions first, then odd-position matches not adjacent to a taken
     even match.  The result is a maximal independent set, so match
     density is close to greedy's, and no index arrays materialize."""
-    n = len(m)
-    even = np.zeros(n, dtype=bool)
-    even[::2] = True
-    ce = m & even
-    blocked = np.zeros(n, dtype=bool)
-    blocked[1:] = ce[:-1]
-    blocked[:-1] |= ce[1:]
-    return ce | (m & ~even & ~blocked)
+    ce = m.copy()
+    ce[1::2] = False                 # the even-position matches
+    chosen = m ^ ce                  # the odd-position ones, minus
+    # those next to a taken even match (on bools, a > b is a & ~b)
+    np.greater(chosen[1:], ce[:-1], out=chosen[1:])
+    np.greater(chosen[:-1], ce[1:], out=chosen[:-1])
+    chosen |= ce
+    return chosen
+
+
+def _merge(a: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """Finish one merge pass over the stream `a`, given x[i] = the code
+    of the pair (a[i], a[i+1]) XOR a[i] (0 where no rule applies): each
+    chosen match's left element becomes its code, its right element is
+    dropped.  Arithmetic on x and one compress — numpy's where, masked
+    copies and boolean-mask indexing all cost more on these
+    dense, alternating masks."""
+    m = x != 0
+    if not m.any():
+        return a
+    chosen = _choose_matches(m)
+    x *= chosen        # now x ^ left is the code where chosen, else left
+    n = len(a)
+    out = np.empty(n, dtype=a.dtype)
+    np.bitwise_xor(x, a[:-1], out=out[:-1])
+    out[-1] = a[-1]
+    keep = np.empty(n, dtype=bool)
+    keep[0] = True
+    np.logical_not(chosen, out=keep[1:])
+    return np.compress(keep, out)
 
 
 # ------------------------------------------------------- u8 (fast) mode
 
 def _sub_u8(a: np.ndarray, lut: np.ndarray) -> np.ndarray:
-    """One merge pass entirely in uint8 domain.
-
-    Single 64 KiB int16 LUT gather per pass: entry = code + 1, 0 = no
-    rule (one gather instead of separate match/code tables)."""
+    """One merge pass entirely in uint8 domain: one 1-D take, one
+    compress.  The pair stream is the stream itself read as unaligned
+    little-endian uint16 (a[i] | a[i+1] << 8) — a strided view, so no
+    key array is built — and `lut` (from _luts_u8) is indexed in that
+    order."""
     if len(a) < 2:
         return a
-    # 2-D view of the same 64 KiB LUT: numpy folds the (left, right)
-    # pair into the flat index in C — measurably faster than building
-    # the uint16 key array (astype + shift + or temporaries) first
-    v = lut.reshape(256, 256)[a[:-1], a[1:]]
-    m = v > 0
-    if not m.any():
-        return a
-    chosen = _choose_matches(m)
-    v -= 1
-    vals = np.where(chosen, v.astype(np.uint8), a[:-1])
-    out = np.empty(len(a), dtype=np.uint8)
-    out[:-1] = vals
-    out[-1] = a[-1]
-    keep = np.empty(len(a), dtype=bool)
-    keep[0] = True
-    keep[1:] = ~chosen
-    return out[keep]
+    x = np.take(lut, np.ndarray((len(a) - 1,), "<u2", buffer=a,
+                                strides=(1,)))
+    x ^= a[:-1]
+    return _merge(a, x)
 
 
 def _luts_u8(rules: list[tuple[int, int, int]]) -> np.ndarray:
-    lut = np.zeros(1 << 16, dtype=np.int16)
+    """u8 pair LUT, indexed by left | right << 8: the rule's code, else
+    `left` itself (a code never equals its own left symbol, so
+    lut[pair] ^ left is nonzero exactly at the rules)."""
+    lut = np.tile(np.arange(256, dtype=np.uint8), 256)
     for code, left, right in rules:
-        lut[(left << 8) | right] = code + 1
+        lut[left | (right << 8)] = code
     return lut
 
 
@@ -251,19 +270,13 @@ def _escape_bytes(arr: np.ndarray, esc: int,
     lut = np.zeros(256, dtype=bool)
     lut[esc] = True
     lut[codes] = True
-    mask = lut[arr]
-    if not mask.any():
+    hit = np.flatnonzero(lut[arr])
+    if not len(hit):
         return arr
     lit_map, _ = _escape_maps(esc, codes)
-    shift = np.cumsum(mask)
-    shift -= mask
-    pos = np.arange(len(arr), dtype=np.int64)
-    pos += shift
-    out = np.empty(len(arr) + int(mask.sum()), dtype=np.uint8)
-    out[pos] = arr
-    esc_pos = pos[mask]
-    out[esc_pos] = esc
-    out[esc_pos + 1] = lit_map[arr[mask]]
+    out = np.insert(arr, hit, esc)
+    hit += np.arange(1, len(hit) + 1)   # where each literal landed
+    out[hit] = lit_map[out[hit]]
     return out
 
 
@@ -272,14 +285,14 @@ def _unescape_bytes(arr: np.ndarray, esc: int,
     """Inverse of _escape_bytes: every esc byte is a marker (literals
     are remapped to safe values, so none collides with esc); drop the
     markers and un-map the literal that follows each."""
-    markers = arr == esc
-    if not markers.any():
+    mark = np.flatnonzero(arr == esc)
+    if not len(mark):
         return arr
     _, lit_inv = _escape_maps(esc, codes)
-    lit_pos = np.flatnonzero(markers) + 1
-    out = arr.copy()
-    out[lit_pos] = lit_inv[out[lit_pos]]
-    return out[~markers]
+    out = np.delete(arr, mark)
+    mark -= np.arange(len(mark))        # where each literal landed
+    out[mark] = lit_inv[out[mark]]
+    return out
 
 
 def _pick_escape_set(hist: np.ndarray, n: int) -> tuple[int, np.ndarray, int]:
@@ -295,33 +308,25 @@ def _pick_escape_set(hist: np.ndarray, n: int) -> tuple[int, np.ndarray, int]:
 # --------------------------------------------------- u16 (generic) mode
 
 def _build_lut(rules: list[tuple[int, int]]) -> np.ndarray:
-    """code = lut[left << 10 | right]; -1 means no rule."""
-    lut = np.full(_LUT_SIZE, -1, dtype=np.int16)
+    """u16 pair LUT, indexed by left << 10 | right: the rule's code
+    (256 + rule index), else `left` itself."""
+    lut = np.repeat(np.arange(1 << _KEY_BITS, dtype=np.uint16),
+                    1 << _KEY_BITS)
     for i, (left, right) in enumerate(rules):
         lut[(left << _KEY_BITS) | right] = 256 + i
     return lut
 
 
 def _substitute(a: np.ndarray, lut: np.ndarray) -> np.ndarray:
-    """One merge pass in uint16 code domain."""
+    """One merge pass in uint16 code domain: one take, one compress."""
     if len(a) < 2:
         return a
     key = a[:-1].astype(np.uint32)
     key <<= _KEY_BITS
     key |= a[1:]
-    code = lut[key]
-    m = code >= 0
-    if not m.any():
-        return a
-    chosen = _choose_matches(m)
-    vals = np.where(chosen, code.view(np.uint16), a[:-1])
-    out = np.empty(len(a), dtype=np.uint16)
-    out[:-1] = vals
-    out[-1] = a[-1]
-    keep = np.empty(len(a), dtype=bool)
-    keep[0] = True
-    keep[1:] = ~chosen
-    return out[keep]
+    x = np.take(lut, key)
+    x ^= a[:-1]
+    return _merge(a, x)
 
 
 def _train_u16(arr: np.ndarray, max_symbols: int = MAX_SYMBOLS,
@@ -458,37 +463,30 @@ def encode(buf: bytes, table, hist: np.ndarray | None = None) -> bytes:
     # deep tables (adaptive paper-gain config) need as many substitution
     # passes as training rounds for their longest symbols to materialize
     passes = table.get("rounds", ROUNDS) if table else ROUNDS
-    if table and table["mode"] == "u8e":
-        esc, codes = table["esc"], table["codes"]
-        raw = _escape_bytes(raw, esc, codes)
+    if table and table["mode"] in ("u8", "u8e"):
         rules = table["rules"]
-        lut8 = _luts_u8(rules)
-        outs = _tiled(raw, lambda a: _sub_u8(a, lut8), lambda s: s,
-                      passes=passes)
-        a = outs[0] if len(outs) == 1 else np.concatenate(outs)
-        head = (struct.pack("<BBB", 2, esc, len(codes))
-                + np.asarray(codes, dtype=np.uint8).tobytes()
-                + struct.pack("<BQ", len(rules), len(a)))
-        rules_b = b"".join(struct.pack("<BBB", c, l, r) for c, l, r in rules)
-        return head + rules_b + a.tobytes()
-    if table and table["mode"] == "u8":
-        rules = table["rules"]
-        # safety: codes must be absent from this buffer (always true when
-        # the table was trained on it); otherwise ship zero rules
-        if hist is None:
-            hist = np.bincount(raw, minlength=256)
-        if any(hist[c] for c, _, _ in rules):
-            rules = []
+        if table["mode"] == "u8e":
+            esc, codes = table["esc"], table["codes"]
+            raw = _escape_bytes(raw, esc, codes)
+            head = (struct.pack("<BBB", 2, esc, len(codes))
+                    + np.asarray(codes, dtype=np.uint8).tobytes())
+        else:
+            # safety: codes must be absent from this buffer (always true
+            # when the table was trained on it); otherwise ship zero rules
+            if hist is None:
+                hist = np.bincount(raw, minlength=256)
+            if any(hist[c] for c, _, _ in rules):
+                rules = []
+            head = b"\x01"
+        outs = [raw]
         if rules:
             lut8 = _luts_u8(rules)
             outs = _tiled(raw, lambda a: _sub_u8(a, lut8), lambda s: s,
                           passes=passes)
-            a = outs[0] if len(outs) == 1 else np.concatenate(outs)
-        else:
-            a = raw
-        head = struct.pack("<BBQ", 1, len(rules), len(a))
-        rules_b = b"".join(struct.pack("<BBB", c, l, r) for c, l, r in rules)
-        return head + rules_b + a.tobytes()
+        # one copy: the tiles are joined straight into the payload
+        return b"".join([head, struct.pack("<BQ", len(rules),
+                                           sum(map(len, outs))),
+                         *(struct.pack("<BBB", *r) for r in rules), *outs])
 
     rules = table["rules"] if table else []
     if rules:

@@ -159,14 +159,18 @@ def _build_bloom(col: pa.Array) -> list[int] | None:
         return None
     vals = vals.cast(pa.large_binary())
     offs = np.frombuffer(vals.buffers()[1], dtype=np.int64,
-                         count=len(vals) + 1, offset=vals.offset * 8)
+                         count=len(vals) + 1,
+                         offset=vals.offset * 8).tolist()
     data = memoryview(vals.buffers()[2])
+    lanes = np.array([_bloom_hash_lanes(bytes(data[a:b]))
+                      for a, b in zip(offs[:-1], offs[1:])], dtype=np.int64)
     m = _bloom_m_bits(len(vals))
-    words = np.zeros(m // 64, dtype=np.uint64)
-    for a, b in zip(offs[:-1], offs[1:]):
-        for bit in _bloom_bit_positions(bytes(data[a:b]), m):
-            words[bit >> 6] |= np.uint64(1) << np.uint64(bit & 63)
-    return words.view(np.int64).tolist()
+    # _bloom_bit_positions for every value at once: (n, k) positions
+    pos = (lanes[:, :1] + np.arange(_BLOOM_K) * lanes[:, 1:]) % m
+    bits = np.zeros(m, dtype=bool)
+    bits[pos] = True
+    # little-endian bit order: bit j lands in word j//64, bit j%64
+    return np.packbits(bits, bitorder="little").view("<i8").tolist()
 
 
 def encode_chunk(batch: pa.RecordBatch, part_id: int, chunk_id: int,

@@ -201,6 +201,110 @@ def test_fsst_golden_payloads(shape, fsst_offsets):
     assert fsst.decode(memoryview(payload)) == raw
 
 
+@pytest.mark.parametrize("shape,trained_on", [
+    ("u8", "u8"), ("u16", "u16"), ("u16_empty", "u16_empty"),
+    ("u8_empty", "u8"), ("u8_zero_rules", "u8")])
+def test_fsst_golden_payloads_encode(shape, trained_on):
+    """The encoder reproduces the golden payloads byte for byte, with a
+    table trained on the shape's own buffer or on the u8 shape's (whose
+    codes occur in u8_zero_rules, so the encoder ships zero rules)."""
+    raw, hexpayload = FSST_GOLDEN[shape]
+    table = fsst.train(FSST_GOLDEN[trained_on][0])
+    assert fsst.encode(raw, table) == bytes.fromhex(hexpayload)
+
+
+_WORDS = [b"the ", b"and ", b"http://", b"www.", b".example", b".com/",
+          b"index", b"page=", b"of ", b"streaming ", b"column ", b"x"]
+
+
+def _multi_tile_buffer(mode: str) -> bytes:
+    """A > 2-tile buffer whose wire mode is `mode`; a frequent pair
+    straddles each tile edge (tiles are substituted independently)."""
+    rng = np.random.default_rng(17)
+    n = 2 * fsst._TILE + 40_000
+    ws = rng.integers(0, len(_WORDS), n // 5)
+    buf = bytearray(b"".join(_WORDS[i] for i in ws)[:n])
+    for edge in (fsst._TILE, 2 * fsst._TILE):
+        buf[edge - 2:edge + 2] = b"http"
+    if mode == "u8e":      # every byte value, rarely: escape mode
+        for at in (1000, fsst._TILE - 128, 2 * fsst._TILE - 128):
+            buf[at:at + 256] = bytes(range(256))
+    elif mode == "u16":    # 30% uniform noise: escaping costs too much
+        noise = rng.integers(0, 256, n, dtype=np.uint8)
+        arr = np.frombuffer(bytes(buf), np.uint8).copy()
+        sel = rng.random(n) < 0.3
+        arr[sel] = noise[sel]
+        buf = bytearray(arr.tobytes())
+    return bytes(buf)
+
+
+# sha256 of fsst.encode(buf, fsst.train(buf, **config)) over
+# _multi_tile_buffer(mode), written by the encoder that predates the
+# 1-D take substitution pass (its 2-D gather pinned what "same bytes"
+# means for the rewrite)
+_GAIN4 = {"rank": "gain", "rounds": 4, "budget": (40, 24, 16, 16)}
+FSST_MULTI_TILE_SHA256 = {
+    ("u8", "count"):
+        "6633e9b6237ba834aa1ae6d0cd0879b2b08307ee12edf7ed9b4137f3604d31bd",
+    ("u8", "gain"):
+        "eea690df914ac1b270e41b7bb2f71475ddbdc76849e47757e759e27245da07fe",
+    ("u8e", "count"):
+        "ce8c5f72f4c0e9cd99f624c024d4cb14cd37c4a87b360bda7ade7a7c0bda3053",
+    ("u8e", "gain"):
+        "aff0dea6723364c07f8f234d0e6672060e110c863c017293f56665291ed29411",
+    ("u16", "count"):
+        "68c3d89137572e3af88dba6d7003fd1a5116935af9d2ecb3af7056de657572b3",
+    ("u16", "gain"):
+        "bea49704a5079ac0eeaefede2912a79ad17b8e3fe78fcf588eebfeb945db4269",
+}
+
+
+@pytest.mark.parametrize("mode,rank", sorted(FSST_MULTI_TILE_SHA256))
+def test_fsst_encode_multi_tile_digests(mode, rank):
+    import hashlib
+    raw = _multi_tile_buffer(mode)
+    table = fsst.train(raw, **(_GAIN4 if rank == "gain" else {}))
+    assert table["mode"] == mode
+    payload = fsst.encode(raw, table)
+    assert (hashlib.sha256(payload).hexdigest()
+            == FSST_MULTI_TILE_SHA256[mode, rank])
+    assert fsst.decode(payload) == raw
+
+
+# sha256 of the payloads (and the url Bloom words, as little-endian
+# int64) of one 5,000-row webpage chunk, written by the encoder that
+# predates the 1-D take substitution pass and the vectorized Bloom
+# build.  The block layer is zstd, so a zstd release that changes its
+# output changes these too.
+CHUNK_251_SHA256 = {
+    "url": "aa07c2fb8ee5c202749c3f3b7addd7f1f2dc6072adf6d5c30bcf5315503c5642",
+    "warc_ts":
+        "581a987455f633ffa87fe7e5323ef85d2eb322cecb9487d71eefd84bea34cde9",
+    "html": "c6ef9f68d48bcfc2757f021f6f11ad30fc2375c020ef0d03f43a1a89f6b4a962",
+    "text": "a85d58c49c572c6a5bd5f2325e92ceb890e07dcc6a9740732241ac9381398ee9",
+    "lang": "3d47f3ba6dcd25fedd7f37486a8fd31130698a1062ee5e3fda5f39c49212d299",
+    "bloom:url":
+        "2066e958c5835184ac516962b4818612a8dfa5e7c250fff6fbefa657259a986f",
+}
+
+
+def test_encode_chunk_payload_digests():
+    import hashlib
+
+    from parquet_spark.corpus import gen_batch
+    from parquet_spark.engine import encode_chunk
+    ch = encode_chunk(gen_batch(np.arange(5000), 251), 0, 0, "auto", {},
+                      zone_key="url", block_codec="auto",
+                      bloom_cols=["url"])
+    got = {name: hashlib.sha256(p).hexdigest()
+           for name, p in zip(ch["names"], ch["payloads"])}
+    for name, words in zip(ch["bloom_cols"], ch["blooms"]):
+        got["bloom:" + name] = hashlib.sha256(
+            np.array(words, "<i8").tobytes()).hexdigest()
+    assert ch["codecs"] == ["str_plain", "int", "str_plain", "fsst", "dict"]
+    assert got == CHUNK_251_SHA256
+
+
 def _fsst_mode(payload: bytes) -> int:
     """Wire mode byte of the FSST payload inside a STR_FSST column."""
     from parquet_spark.codecs import column
@@ -892,6 +996,53 @@ def test_prefix_not_picked_without_adjacent_sharing():
                      for i in range(4000)])
     name, _ = encode_column(docs)
     assert name != "prefix"
+
+
+def _prefix_cases() -> dict[str, pa.Array]:
+    rng = np.random.default_rng(5)
+    ab = sorted("".join(rng.choice(list("ab"), k))
+                for k in rng.integers(0, 12, 3000))
+    return {
+        # lcp equals the whole value: duplicates borrow every byte
+        "duplicates": pa.array(["x", "abc", "abc", "abc", "abcd", "abcd",
+                                "b", "b"]),
+        # shared prefixes past the 256-byte cap, then past it again
+        "long_prefix": pa.array(sorted(
+            "P" * 300 + f"{i:04d}" for i in range(50))
+            + ["Q" * 280 + "a", "Q" * 280 + "b", "Q" * 520]),
+        "empties": pa.array(["", "", "a", "", "ab", "ab", ""]),
+        "nulls": pa.array([None, "host/a", None, "host/ab", "host/ab",
+                           None]),
+        "single": pa.array(["only-one-value"]),
+        "all_empty": pa.array(["", "", "", ""]),
+        "all_null": pa.array([None, None], type=pa.string()),
+        # lcp rises and falls in every pattern: byte j of a row borrows
+        # from several rows back
+        "ab_sorted": pa.array(ab),
+        "binary": pa.array([b"\x00\xff" * 3, b"\x00\xff" * 3 + b"\x01",
+                            None, b"", b"\x00\xff\x00", b"\x00\xff\x00"],
+                           type=pa.binary()),
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_prefix_cases()))
+def test_prefix_roundtrip_cases(case):
+    arr = _prefix_cases()[case]
+    name, payload = encode_column(arr, codec="prefix")
+    assert name == "prefix"
+    out = decode_column(payload, arr.type)
+    assert out.type == arr.type and out.equals(arr)
+
+
+def test_prefix_roundtrip_sorted_url_chunk():
+    import pyarrow.compute as pc
+
+    from parquet_spark.corpus import gen_batch
+    urls = gen_batch(np.arange(5000), 301).column("url")
+    urls = pc.take(urls, pc.sort_indices(urls))
+    name, payload = encode_column(urls, codec="prefix")
+    assert name == "prefix"
+    assert decode_column(payload, pa.string()).equals(urls)
 
 
 def test_prefix_boundary_sizes():

@@ -603,6 +603,51 @@ def test_bloom_chunk_level_build_and_positions():
     assert misses >= 480  # FPR well under ~4%
 
 
+def _bloom_reference(values: list, m: int) -> list[int]:
+    """Per-value reference: set each value's _bloom_bit_positions one
+    bit at a time, as signed 64-bit words."""
+    from parquet_spark.engine import _bloom_bit_positions
+    words = [0] * (m // 64)
+    for v in values:
+        for p in _bloom_bit_positions(v, m):
+            words[p >> 6] |= 1 << (p & 63)
+    return [w - (1 << 64) if w >> 63 else w for w in words]
+
+
+@pytest.mark.parametrize("case", ["string", "binary", "sliced", "empties",
+                                  "max_bits"])
+def test_bloom_build_matches_per_value_reference(case):
+    from parquet_spark.engine import _BLOOM_MAX_BITS, _build_bloom
+    if case == "max_bits":   # enough values to hit the 2**20-bit cap
+        vals = [f"https://h{i % 97}.example.com/{i:07d}"
+                for i in range(_BLOOM_MAX_BITS // 10 + 5000)]
+        col = pa.array(vals)
+    elif case == "binary":
+        vals = [bytes([i % 256, i // 256]) * (i % 5) for i in range(3000)]
+        col = pa.array(vals[:100] + [None] + vals[100:], type=pa.binary())
+    elif case == "empties":
+        vals = ["", "a", "", ""]
+        col = pa.array([None, "", "a", None, "", ""])
+    else:
+        vals = [None if i % 7 == 0 else f"v{i}-" + "x" * (i % 13)
+                for i in range(2500)]
+        col = pa.array(vals)
+        if case == "sliced":  # a non-zero array offset
+            col, vals = col.slice(333, 1500), vals[333:1833]
+        vals = [v for v in vals if v is not None]
+    enc = [v if isinstance(v, bytes) else v.encode() for v in vals]
+    words = _build_bloom(col)
+    m = len(words) * 64
+    if case == "max_bits":
+        assert m == _BLOOM_MAX_BITS
+    assert words == _bloom_reference(enc, m)
+
+
+def test_bloom_build_all_null_is_none():
+    from parquet_spark.engine import _build_bloom
+    assert _build_bloom(pa.array([None, None], type=pa.string())) is None
+
+
 def test_bloom_rejects_numeric_columns():
     from parquet_spark.engine import encode_chunk
     batch = pa.record_batch([pa.array(range(100))], names=["x"])
