@@ -24,6 +24,7 @@ state and no shuffle (narrow mapInArrow over encoded rows).
 
 from __future__ import annotations
 
+import hashlib
 from typing import Iterator
 
 import numpy as np
@@ -36,7 +37,6 @@ from .codecs import decode_column, encode_column
 
 def file_digest(path: str) -> str:
     """Streaming blake2b-64 of a file's bytes (integrity lineage)."""
-    import hashlib
     h = hashlib.blake2b(digest_size=8)
     with open(path, "rb") as f:
         for block in iter(lambda: f.read(1 << 20), b""):
@@ -134,7 +134,6 @@ def _bloom_hash_lanes(value_bytes: bytes) -> tuple[int, int]:
     """Two 31-bit md5 lanes (h2 forced odd) — 31 bits so the probe-side
     Spark expression pmod(h1 + i*h2, m) stays far from int64 overflow
     while m (<= 2^20) divides evenly into the lane space."""
-    import hashlib
     d = hashlib.md5(value_bytes).digest()
     h1 = int.from_bytes(d[:8], "little") & 0x7FFFFFFF
     h2 = (int.from_bytes(d[8:16], "little") & 0x7FFFFFFF) | 1
@@ -162,8 +161,13 @@ def _build_bloom(col: pa.Array) -> list[int] | None:
                          count=len(vals) + 1,
                          offset=vals.offset * 8).tolist()
     data = memoryview(vals.buffers()[2])
-    lanes = np.array([_bloom_hash_lanes(bytes(data[a:b]))
-                      for a, b in zip(offs[:-1], offs[1:])], dtype=np.int64)
+    # _bloom_hash_lanes for every value at once: one md5 per value, both
+    # little-endian 64-bit lanes of each digest read in one view
+    digests = b"".join([hashlib.md5(data[a:b]).digest()
+                        for a, b in zip(offs[:-1], offs[1:])])
+    lanes = (np.frombuffer(digests, "<u8").reshape(-1, 2)
+             & np.uint64(0x7FFFFFFF)).astype(np.int64)
+    lanes[:, 1] |= 1
     m = _bloom_m_bits(len(vals))
     # _bloom_bit_positions for every value at once: (n, k) positions
     pos = (lanes[:, :1] + np.arange(_BLOOM_K) * lanes[:, 1:]) % m

@@ -694,6 +694,81 @@ def _range_boundaries(df: DataFrame, col: str, n_parts: int) -> list:
             for i in range(1, n_parts)]
 
 
+def _murmur3_hash_int(i: int, seed: int = 42) -> int:
+    """Spark's Murmur3_x86_32.hashInt (the hash behind F.hash and
+    HashPartitioning), as a signed 32-bit int."""
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (32 - r))) & 0xFFFFFFFF
+    k = (rotl((i * 0xCC9E2D51) & 0xFFFFFFFF, 15) * 0x1B873593) & 0xFFFFFFFF
+    h = rotl(seed ^ k, 13)
+    h = ((h * 5 + 0xE6546B64) & 0xFFFFFFFF) ^ 4  # fmix(h, length=4)
+    h = ((h ^ (h >> 16)) * 0x85EBCA6B) & 0xFFFFFFFF
+    h = ((h ^ (h >> 13)) * 0xC2B2AE35) & 0xFFFFFFFF
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+def _one_part_per_task(df: DataFrame, part_col: str, n_parts: int,
+                       part_offset: int = 0) -> DataFrame:
+    """Exchange that sends part p (p - part_offset in [0, n_parts)) to
+    task p - part_offset: a plain hash exchange on an int tag per part,
+    where tag(slot) is the smallest int Spark's HashPartitioning
+    (murmur3 seed 42, pmod n_parts) sends to that slot.  Unlike
+    repartitionByRange on the part id it runs no sampling job over the
+    input and never packs two parts onto one task; AQE leaves it alone
+    (repartition by number is never coalesced).  Writers still group
+    rows by the part column, so a mismatch could only unbalance tasks,
+    never misplace rows."""
+    tags: list[int | None] = [None] * n_parts
+    left, t = n_parts, 0
+    while left:
+        slot = _murmur3_hash_int(t) % n_parts
+        if tags[slot] is None:
+            tags[slot], left = t, left - 1
+        t += 1
+    idx = (F.col(part_col) - F.lit(part_offset) + 1).cast("int")
+    return df.repartition(
+        n_parts, F.element_at(F.array(*[F.lit(x) for x in tags]), idx))
+
+
+def _placed_frame(df: DataFrame, layout: dict,
+                  part_offset: int = 0) -> DataFrame:
+    """df plus its `_part` column under `layout` (FORMAT.md placement:
+    hash, range or zorder), exchanged one part per task and sorted by
+    (_part, order key) within each task.  Resume needs a stable,
+    FILTERABLE part id, so (unlike the plain encode_table hot path)
+    the part is an explicit column."""
+    mode, key, n_parts = layout["mode"], layout["key"], layout["n_parts"]
+    boundaries = layout.get("boundaries")
+
+    def _boundary_group(order_col):
+        if not boundaries:
+            return F.lit(0)
+        # part = #boundaries below the order value: O(n_parts)
+        # comparisons per row inside codegen (nulls land in part 0)
+        barr = F.array(*[F.lit(b) for b in boundaries])
+        return F.aggregate(
+            barr, F.lit(0),
+            lambda acc, b: acc + F.when(order_col > b, 1).otherwise(0))
+
+    if mode == "zorder":
+        from .engine import zorder_value
+        df = df.withColumn("_zval", zorder_value(
+            df, key, bits=layout["zorder_bits"],
+            stats=layout["zorder_stats"]))
+        order, part = ["_zval"], _boundary_group(F.col("_zval"))
+    elif mode == "range":
+        order, part = key, _boundary_group(F.col(key[0]))
+    else:
+        order, part = key, F.pmod(F.xxhash64(*key), F.lit(n_parts))
+    dfp = (_one_part_per_task(df.withColumn("_part",
+                                            part + F.lit(part_offset)),
+                              "_part", n_parts, part_offset)
+           .sortWithinPartitions("_part", *order))
+    # the z-value is a transient sort key, never stored
+    return dfp.drop("_zval") if mode == "zorder" else dfp
+
+
 def write_encoded(df: DataFrame, table_path: str,
                   key: list[str] | None = None, n_parts: int | None = None,
                   codec: str = "auto",
@@ -736,6 +811,11 @@ def write_encoded(df: DataFrame, table_path: str,
     via scan_table/scan_filtered prune chunks zone ranges can't; part
     of the layout fingerprint, so a resume can't silently produce a
     half-bloom-indexed table.
+
+    Parts map to tasks one to one: the layout exchange has n_parts
+    tasks and task i encodes and writes part `part_offset + i` as one
+    part file (_one_part_per_task), so no task carries two parts and no
+    extra job samples the input to place them.
 
     Partitions already present in the CURRENT snapshot are skipped (the
     filter on `_part` prunes them before any encoding work). `limit_parts`
@@ -824,9 +904,6 @@ def write_encoded(df: DataFrame, table_path: str,
             f"mode must be 'hash', 'range' or 'zorder', got {mode!r}")
     layout = {"mode": mode, "key": key, "n_parts": n_parts,
               "rows_per_chunk": rows_per_chunk}
-    boundaries: list | None = None
-    zo_stats: list | None = None
-    zo_bits: int | None = None
     playout = None if replace else _layout_of(parent)
     if mode == "range":
         # explicit range partitioning on key[0] (north rule).  Parts
@@ -936,40 +1013,7 @@ def write_encoded(df: DataFrame, table_path: str,
             df = (apply_global_dict(df, c, gd)
                   .withColumnRenamed(c + "_id", c))
         df = df.select(*orig_cols)  # ids sit in the original column slots
-    # resume needs a stable, FILTERABLE group id, so (unlike the plain
-    # encode_table hot path) the group is an explicit column; range
-    # placement keeps the group->task mapping ~1:1
-    def _boundary_group(order_col):
-        if not boundaries:
-            return F.lit(0)
-        # part = #boundaries below the order value: O(n_parts)
-        # comparisons per row inside codegen (nulls land in part 0)
-        barr = F.array(*[F.lit(b) for b in boundaries])
-        return F.aggregate(
-            barr, F.lit(0),
-            lambda acc, b: acc + F.when(order_col > b, 1).otherwise(0))
-
-    if mode == "range":
-        dfp = (df.withColumn("_part",
-                             _boundary_group(F.col(key[0]))
-                             + F.lit(part_offset))
-                 .repartitionByRange(n_parts, "_part")
-                 .sortWithinPartitions("_part", *key))
-    elif mode == "zorder":
-        from .engine import zorder_value
-        zv = zorder_value(df, key, bits=zo_bits, stats=zo_stats)
-        dfp = (df.withColumn("_zval", zv)
-                 .withColumn("_part", _boundary_group(F.col("_zval"))
-                             + F.lit(part_offset))
-                 .repartitionByRange(n_parts, "_part")
-                 .sortWithinPartitions("_part", "_zval")
-                 .drop("_zval"))  # transient sort key, never stored
-    else:
-        dfp = (df.withColumn("_part",
-                             F.pmod(F.xxhash64(*key), F.lit(n_parts))
-                             + F.lit(part_offset))
-                 .repartitionByRange(n_parts, "_part")
-                 .sortWithinPartitions("_part", *key))
+    dfp = _placed_frame(df, layout, part_offset)
     todo = [p for p in range(part_offset, part_offset + n_parts)
             if p not in done]
     if limit_parts is not None:
@@ -1746,36 +1790,36 @@ def rewrite_table(spark: SparkSession, table_path: str,
     os.makedirs(data_dir, exist_ok=True)
 
     def writer(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
         t0 = time.monotonic()
-        rows: list[pa.RecordBatch] = []
-        for batch in batches:
-            rows.append(batch)
+        rows = list(batches)
         if not rows:
             return
         tbl = pa.Table.from_batches(rows)
-        final = os.path.join(
-            data_dir, f"rewrite-{new_sid:06d}-{pid:05d}.parquet")
-        fhash = write_part_atomic(tbl, final)
-        cmix = sorted({c for ch in tbl.column("codecs")
-                       for c in ch.as_py()})
-        yield pa.RecordBatch.from_pylist([{
-            "part_id": pid, "file": final,
-            "n_chunks": tbl.num_rows,
-            "n_rows": int(pa.compute.sum(tbl.column("n_rows")).as_py()),
-            "bytes_in": int(sum(sum(v.as_py())
-                                for v in tbl.column("bytes_in"))),
-            "bytes_out": int(sum(sum(v.as_py())
-                                 for v in tbl.column("bytes_out"))),
-            "wall_ms": (time.monotonic() - t0) * 1000.0,
-            "codecs": ",".join(cmix),
-            "zones": part_zone_summary_from_chunkrows(tbl),
-            "file_hash": fhash,
-        }])
+        pids = tbl.column("part_id").to_numpy()
+        # one part per task by construction; grouping by the rows' own
+        # part id keeps every file single-part regardless
+        for pid in np.unique(pids).tolist():
+            sub = tbl.filter(pa.array(pids == pid))
+            final = os.path.join(
+                data_dir, f"rewrite-{new_sid:06d}-{pid:05d}.parquet")
+            fhash = write_part_atomic(sub, final)
+            cmix = sorted({c for ch in sub.column("codecs")
+                           for c in ch.as_py()})
+            yield pa.RecordBatch.from_pylist([{
+                "part_id": pid, "file": final,
+                "n_chunks": sub.num_rows,
+                "n_rows": int(pa.compute.sum(sub.column("n_rows")).as_py()),
+                "bytes_in": int(sum(sum(v.as_py())
+                                    for v in sub.column("bytes_in"))),
+                "bytes_out": int(sum(sum(v.as_py())
+                                     for v in sub.column("bytes_out"))),
+                "wall_ms": (time.monotonic() - t0) * 1000.0,
+                "codecs": ",".join(cmix),
+                "zones": part_zone_summary_from_chunkrows(sub),
+                "file_hash": fhash,
+            }])
 
-    lineage = (enc.repartition(n_parts, "part_id")
+    lineage = (_one_part_per_task(enc, "part_id", n_parts)
                .sortWithinPartitions("part_id", "chunk_id")
                .mapInArrow(writer, LINEAGE_DDL).collect())
     parts = {str(r.part_id): {

@@ -615,7 +615,7 @@ def _bloom_reference(values: list, m: int) -> list[int]:
 
 
 @pytest.mark.parametrize("case", ["string", "binary", "sliced", "empties",
-                                  "max_bits"])
+                                  "non_ascii", "max_bits"])
 def test_bloom_build_matches_per_value_reference(case):
     from parquet_spark.engine import _BLOOM_MAX_BITS, _build_bloom
     if case == "max_bits":   # enough values to hit the 2**20-bit cap
@@ -628,6 +628,11 @@ def test_bloom_build_matches_per_value_reference(case):
     elif case == "empties":
         vals = ["", "a", "", ""]
         col = pa.array([None, "", "a", None, "", ""])
+    elif case == "non_ascii":  # multi-byte UTF-8, hashed as its bytes
+        vals = [f"https://bücher.example/{i}/ü€😀ß" * (i % 4)
+                for i in range(1500)]
+        col = pa.array(vals[:700] + [None] + vals[700:]).slice(40)
+        vals = vals[40:]
     else:
         vals = [None if i % 7 == 0 else f"v{i}-" + "x" * (i % 13)
                 for i in range(2500)]
